@@ -1,7 +1,9 @@
 #!/bin/bash
 # Fast launcher: java directly against compiled classes + Spark jars,
 # mirroring build.sbt's javaOptions. Usage: scripts/run.sh graft.Verify args...
+# Heap: $SPARK_DRIVER_MEM when set (e.g. 8g), else half the host's memory.
 set -e
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 CLASS="$1"; shift
 OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
@@ -11,9 +13,10 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
          java.base/sun.util.calendar; do
   OPENS="$OPENS --add-opens $p=ALL-UNNAMED"
 done
-exec java $OPENS -XX:CICompilerCount=12 $GRAFT_JAVA_OPTS \
+if [ -n "$SPARK_DRIVER_MEM" ]; then HEAP="-Xmx$SPARK_DRIVER_MEM"; else HEAP="-XX:MaxRAMPercentage=50"; fi
+exec java $OPENS $GRAFT_JAVA_OPTS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-32g}" \
-  -cp "/root/repo/target/scala-2.13/classes:/root/repo/target/scala-2.13/test-classes:/opt/spark/jars/*" \
+  "$HEAP" \
+  -cp "$ROOT/target/scala-2.13/classes:$ROOT/target/scala-2.13/test-classes:/opt/spark/jars/*" \
   "$CLASS" "$@"

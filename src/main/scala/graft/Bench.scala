@@ -54,38 +54,6 @@ object Bench {
   private case class Failed(err: String) extends Outcome
   private case class TimedOut(capS: Double) extends Outcome
 
-  /** Pass-1 times within this factor of the committed floor count as
-    * measured-clean: no pass-2 re-run. */
-  private val FloorSlack = 1.5
-
-  /** Committed steady-state floors from bench_floor.json — parsed
-    * with a regex over the flat `"name": {"floor_s": x, ...}` layout
-    * (the bench binary deliberately has no JSON dependency; the file
-    * is repo-controlled). Missing/unreadable file → empty map → pass 2
-    * degrades to the old re-measure-everything behavior. Floors are
-    * SF-SCOPED (ADVICE r12): the file's "sf" field must match this
-    * run's — floors committed at a larger scale factor applied to a
-    * smaller-SF run would classify everything as at-floor and skip
-    * pass 2 entirely, losing the cross-pass-min contention defense. */
-  private def loadFloors(log: String => Unit): Map[String, Double] =
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("bench_floor.json")), "UTF-8")
-      val SfRe = """"sf"\s*:\s*"([^"]*)"""".r
-      val fileSf = SfRe.findFirstMatchIn(txt).map(_.group(1))
-      // compare by trailing sf token (the file may carry either the
-      // full dir or the sfN.NN name; both end in the same token)
-      def tok(s: String) = s.split('/').lastOption.getOrElse(s)
-      if (fileSf.exists(s => tok(s) != tok(sfDir))) {
-        log(s"floors: sf mismatch (file ${fileSf.get} vs run $sfDir) " +
-          "- ignoring committed floors, pass 2 re-measures everything")
-        Map.empty
-      } else {
-        val Re = """"(q_[A-Za-z0-9_]+)"\s*:\s*\{[^{}]*?"floor_s"\s*:\s*([0-9.eE+-]+)""".r
-        Re.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    } catch { case _: Throwable => Map.empty }
-
   def main(args: Array[String]): Unit = {
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1500").toDouble
     val wall0 = System.nanoTime()
@@ -219,40 +187,18 @@ object Bench {
       attempt(n, clamp((p1Deadline - elapsedS) / remaining, 15.0, 180.0), "pass1")
     }
 
-    // PASS 2 is FLOOR-AWARE (round 12, VERDICT r11 task 1): the suite
-    // outgrew two full passes of the driver budget (r11: 163 pass-2
-    // runs skipped, the re-measurement budget spent on queries already
-    // at their floor). A query whose pass-1 time is within FloorSlack
-    // of its committed bench_floor.json floor measured CLEAN — a
-    // second run can only confirm it; re-measure ONLY queries above
-    // the slack (the steal suspects) plus queries with no committed
-    // floor, slowest-first so the most-inflated numbers are reached
-    // first if the budget still cuts short. Cross-pass min remains the
-    // contention defense: a host-scheduler stall covering both runs of
-    // one query happens; one spanning pass 1 AND its targeted pass-2
-    // re-run would have to span most of the suite.
-    val floors = loadFloors(s => progress.println(f"[${elapsedS}%8.1f] $s"))
-    // unlisted = registered queries with NO committed floor: they fall
-    // back to the always-re-measure path. LOGGED (round 13, VERDICT
-    // r12 task 2), not just tolerated — the round-close protocol is
-    // to merge_floors.py every new query before the driver bench runs,
-    // so a nonzero count here means the floor file lags the surface.
-    val unlisted = names.filterNot(floors.contains)
-    if (floors.nonEmpty && unlisted.nonEmpty)
-      progress.println(s"floors: ${unlisted.size} unlisted (no committed " +
-        s"floor): ${unlisted.mkString(",")}")
-    val (suspects, atFloor) = names.partition { n =>
-      floors.get(n) match {
-        case Some(f) => succ(n) == Double.MaxValue || succ(n) > FloorSlack * f
-        case None => true
-      }
-    }
-    val p2Order = suspects.sortBy { n =>
+    // PASS 2 re-measures EVERY query, slowest first, so the most
+    // inflated pass-1 numbers are reached first if the budget cuts the
+    // pass short. Cross-pass min is the contention defense: a
+    // host-scheduler stall covering one run happens; one spanning
+    // pass 1 AND the pass-2 re-run of the same query would have to
+    // span most of the suite. A query with no success yet sorts by its
+    // timeout cap, or first if every attempt failed.
+    val p2Order = names.sortBy { n =>
       -(if (succ(n) < Double.MaxValue) succ(n)
         else sawTimeout.getOrElse(n, Double.MaxValue / 2))
     }
-    progress.println(s"floor-aware pass 2: ${atFloor.size} at floor, " +
-      s"${p2Order.size} steal suspects to re-measure")
+    progress.println(s"pass 2: ${p2Order.size} queries to re-measure, slowest first")
     val p2Deadline = 0.85 * budgetS
     var skipped = 0
     p2Order.zipWithIndex.foreach { case (n, i) =>
@@ -262,32 +208,6 @@ object Bench {
       } else skipped += 1
     }
     if (skipped > 0) progress.println(s"budget: $skipped pass-2 runs skipped")
-    // BONUS tier: whatever pass-2 budget the suspects left over goes to
-    // the at-floor queries in descending pass-1-excess-over-floor order
-    // — each re-run strips up to (p1 − floor) of residual JIT/window
-    // noise from the total, so the budget lands where the recoverable
-    // inflation is. These are extras by construction (the query already
-    // measured clean), so running out of budget here is not a skip.
-    val bonus = atFloor
-      .filter(n => succ(n) < Double.MaxValue)
-      .sortBy(n => -(succ(n) - floors.getOrElse(n, 0.0)))
-    var bonusRan = 0
-    bonus.foreach { n =>
-      val avail = p2Deadline - elapsedS
-      // ADVICE r12: near the deadline the old 15 s bonus watchdog sat
-      // BELOW committed floors up to ~10 s (at-floor times to ~15 s
-      // under the slack) — a clean query could time out, and every
-      // timeout costs a session rebuild out of the pass-3 budget. A
-      // re-run needs ~2x its best-known time of watchdog headroom to
-      // be worth starting: floor the bonus timeout there, and skip
-      // re-runs the remaining budget can't cover (they're extras by
-      // construction — the query already measured clean).
-      if (avail > 0 && 2.0 * succ(n) <= avail) {
-        attempt(n, clamp(avail, math.max(15.0, 2.0 * succ(n)), 60.0), "pass2b")
-        bonusRan += 1
-      }
-    }
-    progress.println(s"pass 2 bonus: $bonusRan of ${bonus.size} at-floor re-runs")
 
     // Targeted third try for stragglers still slow after two passes —
     // one more chance to land outside a contention window.
@@ -309,15 +229,14 @@ object Bench {
 
     // failed/timeout queries are MARKED in the detail file (ADVICE
     // r12): their "queries" values are the FailPenaltyS poison or a
-    // watchdog cap, not measurements — merge_floors.py must never
-    // seed a floor from them (a poisoned floor makes the floor-aware
-    // pass 2 accept anything up to 1.5x the poison as clean). The
-    // detail file is not tail-capped, so the lists are complete.
+    // watchdog cap, not measurements, and a reader comparing runs must
+    // not take them as timings. The detail file is not tail-capped, so
+    // the lists are complete.
     def jarr(ns: Seq[String]): String =
       ns.map("\"" + _ + "\"").mkString("[", ",", "]")
     // suspect = the reported value is a poison/cap, i.e. NO attempt
     // ever succeeded (a query that timed out once but later measured
-    // clean reports its clean min — a genuine floor candidate)
+    // clean reports its clean min — a genuine measurement)
     val suspectNames = (failedNames ++ timeoutOnly).distinct.sorted
     val full = values.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + f3(v) }
       .mkString(s"""{"total":${f3(total)},"sf":"$sfDir","suspect":${jarr(suspectNames)},"queries":{""", ",", "}}")

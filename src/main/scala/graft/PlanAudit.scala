@@ -399,9 +399,9 @@ object PlanAudit {
     }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // the shared engine session: the audit sees the plans that the
+    // bench times and the oracle checks
+    val spark = graft.util.Sessions.build("planaudit")
     spark.sparkContext.setLogLevel("ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val results = audit(spark, sf)

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   */
 object ProbeBuckets {
   def main(args: Array[String]): Unit = {
-    val spark = TimeOne.perfSession()
+    val spark = graft.util.Sessions.build("probebuckets")
+    spark.sparkContext.setLogLevel("ERROR")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "target/sf1")
     val src = args.headOption.getOrElse("embeddings")
     val emb = src match {

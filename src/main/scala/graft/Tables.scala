@@ -84,13 +84,14 @@ object Tables {
     * 1–3) and plain TIMESTAMP(MICROS) (the regenerated round-5 data),
     * so branch on what the footer actually declares instead of assuming
     * either: NANOS is unreadable by Spark's vectorized reader, so it is
-    * read as long (legacy conf) and converted to TIMESTAMP_NTZ at
+    * read as long (the session's `legacy.parquet.nanosAsLong`, set once
+    * in [[graft.util.Sessions.build]]; loaders never write the
+    * session's config) and converted to TIMESTAMP_NTZ at
     * microsecond precision (exactly DuckDB's behavior for
     * timestamp_ns); MICROS is read directly and only normalized to
     * TIMESTAMP_NTZ. Session TZ is pinned UTC either way.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(spark, sfDir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -117,14 +118,10 @@ object Tables {
       case _ => df
     }
 
-  def orders(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def orders(spark: SparkSession, sfDir: String): DataFrame =
     tsDefensive(load(spark, sfDir, "orders"), "o_orderdate")
-  }
-  def lineitem(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def lineitem(spark: SparkSession, sfDir: String): DataFrame =
     tsDefensive(load(spark, sfDir, "lineitem"), "l_shipdate")
-  }
   def customer(spark: SparkSession, sfDir: String): DataFrame   = load(spark, sfDir, "customer")
   def nation(spark: SparkSession, sfDir: String): DataFrame     = load(spark, sfDir, "nation")
   def region(spark: SparkSession, sfDir: String): DataFrame     = load(spark, sfDir, "region")

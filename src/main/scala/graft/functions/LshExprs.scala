@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Deterministic sign-projection LSH planes — the ONE derivation shared
   * by the Spark kernel below, `llm.Similarity`'s oracle-SQL twins, and
-  * the `ProbeBuckets` occupancy probe (all route through
+  * the `graft.ProbeBuckets` occupancy probe (all route through
   * `Similarity.planesFor`, which delegates here). Weight (t,p,d) =
   * (md5("t:p:d") mod 2001 − 1000)/1000 ∈ [−1,1]; each weight depends
   * only on its own coordinates, so planesFor(k) is a prefix of

@@ -65,15 +65,6 @@ object Lineage {
       recordHashCol.as("record_hash"))
       .orderBy("event_id")
 
-  /** Build a lineage step table for a processing stage. */
-  def lineageStep(events: DataFrame, stage: String,
-                  processName: String, version: String): DataFrame =
-    recordHashes(events)
-      .withColumnRenamed("record_hash", "input_record_hash")
-      .withColumn("processing_stage", lit(stage))
-      .withColumn("process_name", lit(processName))
-      .withColumn("process_version", lit(version))
-
   /** The pipeline's processing stages in order: (stage, seq,
     * process_name) — the reference's ingest → validate → transform
     * flow (`data_lineage.py:146-148` examples, consumer/validator/

@@ -104,9 +104,7 @@ object Graphs {
     // node count) replaces the old per-row `label ≠ old` count and
     // with it the need to carry the previous label through the round.
     var prevSum: Option[java.math.BigDecimal] = None
-    val dbg = sys.env.contains("GRAFT_GRAPH_DEBUG")
     while (!converged && round < maxRounds) {
-      val tR = System.nanoTime()
       val neighborMin = symSelf
         .join(labels.withColumnRenamed(idCol, "nid")
           .withColumnRenamed("label", "nlabel"), col("dst") === col("nid"))
@@ -176,11 +174,7 @@ object Graphs {
       labels = updated
       dropCheckpoint(prev)
       round += 1
-      if (dbg) System.err.println(
-        f"minLabelPropagate($context) round $round: ${(System.nanoTime() - tR) / 1e6}%.0f ms, lsum=${lsum.get}")
     }
-    if (sys.env.contains("GRAFT_GRAPH_DEBUG"))
-      System.err.println(s"minLabelPropagate($context): $round rounds")
     if (!converged) throw new IllegalStateException(
       s"$context did not converge in $maxRounds rounds — a component " +
         "has diameter > maxRounds; raise maxRounds")

@@ -3,14 +3,15 @@ package graft.util
 import org.apache.spark.sql.SparkSession
 
 /** ONE session builder for every entry point (round 14, VERDICT r13
-  * task 2): Bench, TimeOne/TimeMany/ProfileOne, Verify, Smoke and the
-  * streaming demos previously each assembled their own config, so the
-  * two round-13 engine settings (`parallelismFirst=false`, the 5000-
-  * entry codegen class cache) lived ONLY in the timed sessions — the
-  * engine the oracle verified was configured differently from the
-  * engine the bench timed. Centralizing the builder makes them
-  * identical by construction; a future engine-level setting lands here
-  * once and reaches every surface.
+  * task 2): Bench, Verify, Smoke, StreamDemo, PlanAudit, PlanPrint,
+  * TimeMany, ProbeBuckets and the repository benchmark all build their
+  * session here. The entry points previously each assembled their own
+  * config, so the two round-13 engine settings (`parallelismFirst=
+  * false`, the 5000-entry codegen class cache) lived ONLY in the timed
+  * sessions — the engine the oracle verified was configured
+  * differently from the engine the bench timed. Centralizing the
+  * builder makes them identical by construction; a future
+  * engine-level setting lands here once and reaches every surface.
   *
   * Config notes (all scale-adaptive, none a local[32] constant):
   *  - `spark.sql.shuffle.partitions` = the session core count from
@@ -38,6 +39,18 @@ import org.apache.spark.sql.SparkSession
   *    40–200 s pass-2 stalls in round 4's bench).
   *  - `spark.local.dir` under ./target: /tmp is reaped by the host
   *    mid-run (round 4 lost a live shuffle index file that way).
+  *  - `advisoryPartitionSizeInBytes=1m` (round 14,
+  *    OPTIMIZATION_r14.md §3): at these corpus sizes every shuffle is
+  *    a few MB compressed, and the 64 MB default folded the LSH
+  *    candidate-dedup exchanges into one serial partition; at 1 MB
+  *    they split across cores while the tiny iterative shuffles still
+  *    coalesce to one. 8 MB was measured as a net loss. A cluster-scale
+  *    corpus wants the usual 100 MB–1 GB.
+  *  - `legacy.parquet.nanosAsLong=true`: a TIMESTAMP(NANOS) parquet
+  *    column reads as long instead of failing the scan, and
+  *    [[graft.Tables]] converts it to µs (the testdata has shipped
+  *    both NANOS and MICROS). Set once here so the loaders never
+  *    write the session's config; it has no effect on MICROS data.
   */
 object Sessions {
 
@@ -54,8 +67,8 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "1m"))
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", localDir)

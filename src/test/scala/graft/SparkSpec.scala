@@ -17,6 +17,8 @@ object SparkSpec {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      // as in util.Sessions.build: TIMESTAMP(NANOS) parquet reads as long
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -1376,6 +1376,20 @@ class StreamPipelineSpec extends SparkSpec {
     assert(e.getMessage.contains("kafka"))
   }
 
+  test("S2 kafka writer wiring reaches Spark's sink resolver at start()") {
+    implicit val sqlCtx = spark.sqlContext
+    val ckpt = Files.createTempDirectory("graft_kafka_ckpt").toString
+    val mem = MemoryStream[(String, String)]
+    val parsed = StreamPipeline.parse(mem.toDF().toDF("key", "value"))
+    val writer = Sources.kafkaWriter(parsed, "localhost:9092",
+      "banking.processed", ckpt)
+    // As for S1: no kafka connector jar is deployed, so start() stops at
+    // the resolver, after the sink shape and writer options are built.
+    val e = intercept[org.apache.spark.sql.AnalysisException](writer.start())
+    assert(e.getMessage.contains("kafka"))
+    assert(spark.streams.active.isEmpty)
+  }
+
   test("streaming CMS maintenance: batch-sketch sum equals one-shot build") {
     implicit val sqlCtx = spark.sqlContext
     graft.functions.GraftFunctions.registerAll(spark)

@@ -42,6 +42,25 @@ class TablesSpec extends SparkSpec {
     assert(v === "2024-01-15 10:00:00.987654")
   }
 
+  test("loaders leave the session's SQL conf unchanged") {
+    // A fresh session starts from the builder's settings alone, so a
+    // loader that writes the conf shows here whichever specs ran first
+    // on the shared session.
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    val loaders: Seq[(org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame] = Seq(
+      Tables.region, Tables.nation, Tables.customer, Tables.supplier,
+      Tables.part, Tables.orders, Tables.lineitem, Tables.events,
+      Tables.documents, Tables.embeddings)
+    assert(loaders.size === Tables.names.size)
+    loaders.foreach(load => assert(load(s, sf()).schema.nonEmpty))
+    val after = s.conf.getAll
+    // report only what changed, not the whole conf
+    assert((after.toSet -- before.toSet) === Set.empty[(String, String)])
+    assert(after.keySet === before.keySet)
+  }
+
   test("orders loader leaves a readable timestamp column untouched") {
     val real = Tables.orders(spark, sf())
     // today's testdata is plain MICROS: the defensive branch must be a
