@@ -13,6 +13,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * answer to a metrics exporter — at cluster scale the same rows go to
   * a Kafka/parquet sink and Grafana reads that).
   *
+  * Each row keeps the trigger's time split into the parts
+  * `StreamingQueryProgress.durationMs` reports (offsets, planning, the
+  * sink's `addBatch`, WAL and offset commits), so a slow trigger can be
+  * traced to its layer from the captured rows alone.
+  *
   * Driver-side only and O(1) per trigger: the buffer holds one small
   * tuple per micro-batch, never data-sized state. */
 object Monitor {
@@ -24,6 +29,11 @@ object Monitor {
       input_rows_per_sec: Double,
       processed_rows_per_sec: Double,
       trigger_ms: Long,
+      latest_offset_ms: Long,
+      query_planning_ms: Long,
+      add_batch_ms: Long,
+      wal_commit_ms: Long,
+      commit_offsets_ms: Long,
       n_state_rows: Long)
 
   /** Attach with `spark.streams.addListener(capture)`; read the
@@ -37,6 +47,9 @@ object Monitor {
 
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
       val p = e.progress
+      // a trigger's parts; absent ones (no data, no planning) count 0
+      def ms(part: String): Long =
+        Option(p.durationMs.get(part)).map(_.longValue).getOrElse(0L)
       val stateRows =
         if (p.stateOperators == null || p.stateOperators.isEmpty) 0L
         else p.stateOperators.map(_.numRowsTotal).sum
@@ -46,7 +59,8 @@ object Monitor {
         p.numInputRows,
         if (p.inputRowsPerSecond.isNaN) 0.0 else p.inputRowsPerSecond,
         if (p.processedRowsPerSecond.isNaN) 0.0 else p.processedRowsPerSecond,
-        Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L),
+        ms("triggerExecution"), ms("latestOffset"), ms("queryPlanning"),
+        ms("addBatch"), ms("walCommit"), ms("commitOffsets"),
         stateRows))
     }
 

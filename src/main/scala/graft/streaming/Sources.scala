@@ -71,24 +71,20 @@ object Sources {
   /** S8: one-pass dual-sink via foreachBatch — valid records to the
     * main sink, invalid to the dead-letter sink (parquet dirs standing
     * in for the banking.processed / banking.deadletter topics,
-    * `kafka_config.yml:24,29`). Both branch writes go through
-    * [[writeBatchIdempotent]]: a crash between the writes and the
-    * checkpoint's offset commit replays the batch, and a plain append
-    * would land every row twice. */
+    * `kafka_config.yml:24,29`). Both branches share one schema, so they
+    * land in ONE routed [[writeBatchIdempotent]] job: one scan of the
+    * batch, one write, and a crash before the checkpoint's offset commit
+    * replays the batch into the same partitions instead of appending
+    * every row twice. */
   def dualSinkQuery(parsed: DataFrame, mainDir: String, deadDir: String,
                     checkpoint: String): StreamingQuery =
     parsed.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Pin the micro-batch so the two branch writes share one source
-        // scan instead of each re-reading and re-parsing the batch.
-        batch.persist()
-        try {
-          val (valid, dead) = StreamPipeline.deadLetterSplit(batch)
-          writeBatchIdempotent(valid, mainDir, batchId)
-          writeBatchIdempotent(dead, deadDir, batchId)
-        } finally { batch.unpersist(); () }
+        writeBatchIdempotent(StreamPipeline.validate(batch),
+          when(col("is_valid"), "main").otherwise("dead"),
+          Map("main" -> mainDir, "dead" -> deadDir), batchId, Nil)
       }
       .start()
 
@@ -104,9 +100,10 @@ object Sources {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // One source scan feeds all three branches: persist the batch,
-        // else each .write re-reads and re-parses the source. All
-        // three writes are idempotent under crash-replay (see
-        // dualSinkQuery).
+        // else each .write re-reads and re-parses the source. The dead
+        // rows are not enriched, so they do not share main's schema and
+        // take their own write; all three are idempotent under
+        // crash-replay (see writeBatchIdempotent).
         batch.persist()
         try {
           val (valid, dead) = StreamPipeline.deadLetterSplit(batch)
@@ -161,8 +158,10 @@ object Sources {
         batch.persist()
         try {
           val (valid, retry, dead) = StreamPipeline.retrySplit(batch, maxRetries)
-          writeBatchIdempotent(valid, mainDir, batchId)
-          writeBatchIdempotent(dead, deadDir, batchId)
+          // main and dead share retrySplit's schema: one routed write
+          writeBatchIdempotent(valid.union(dead),
+            when(col("is_valid"), "main").otherwise("dead"),
+            Map("main" -> mainDir, "dead" -> deadDir), batchId, Nil)
           val parked = retry
             .withColumn("retry_count", (col("retry_count") + 1).cast("int"))
             .drop("is_valid", "validation_result")
@@ -187,10 +186,11 @@ object Sources {
     * index's stored signatures (never a corpus re-hash — see
     * [[graft.llm.Dedup.minhashLshPairsIncremental]]). Cold start: a
     * missing index means the first batch dedups within itself and its
-    * survivors CREATE the index. Exactly-once: both sinks partition by
-    * micro_batch_id with dynamic partition overwrite, so a crash-replay of
-    * batch N replaces its own partitions — clean sink and index can
-    * never diverge across a retry. */
+    * survivors CREATE the index. Exactly-once: the clean sink lands via
+    * [[writeBatchIdempotent]] and the index appends its batch partition
+    * with dynamic overwrite, so a crash-replay of batch N replaces its
+    * own partitions — clean sink and index can never diverge across a
+    * retry. */
   def nearDupDedupQuery(docs: DataFrame, indexPath: String, cleanDir: String,
                         checkpoint: String,
                         threshold: Double = 0.8): StreamingQuery =
@@ -240,9 +240,10 @@ object Sources {
     * re-hashed. Cold start: the first batch dedups within itself and
     * its survivors create the index at the batch-adaptive width,
     * which the index then pins for every later batch. Exactly-once:
-    * both sinks partition by micro-batch with dynamic partition
-    * overwrite ([[writeBatchIdempotent]] / batch_id partitions), so a
-    * crash-replay of batch N replaces its own partitions. */
+    * both sinks partition by micro-batch ([[writeBatchIdempotent]] for
+    * the clean sink, dynamic overwrite of the index's batch_id
+    * partition), so a crash-replay of batch N replaces its own
+    * partitions. */
   def semanticDedupQuery(emb: DataFrame, indexPath: String, cleanDir: String,
                          checkpoint: String,
                          threshold: Double = 0.9,
@@ -835,26 +836,73 @@ object Sources {
     graft.llm.Similarity.releaseIndexLease(spark, statePath)
   }
 
+  /** Staged-only route column of [[writeBatchIdempotent]]; the rename
+    * drops it, so no sink's rows carry it. */
+  private val RouteCol = "_route"
+
   /** The idempotent-replay write used by every exactly-once file sink
-    * here: each micro-batch lands in its own `micro_batch_id=N`
-    * partition with DYNAMIC partition overwrite, so re-running a batch
-    * after a crash REPLACES its partition instead of appending
-    * duplicates. File sinks are append-only by default; this is the
-    * standard foreachBatch recipe for at-least-once → effectively-once
-    * when the write itself must be the transaction boundary.
+    * here. Each row goes to the sink its `route` value names in
+    * `outDirs`, and each sink gets the batch in its own
+    * `outDir/micro_batch_id=N[/extra=K]` partition. All routes land in
+    * ONE write job, then commit by stage-delete-rename:
+    *
+    *  1. write the batch once, partitioned by route and
+    *     `extraPartitions`, into a hidden per-batch staging dir
+    *     (`.stage_micro_batch_N` under the first route's dir; Spark and
+    *     pyarrow skip dot-dirs, so a reader never sees it);
+    *  2. per route, delete `outDir/micro_batch_id=N` and rename the
+    *     staged route dir into its place — a route with no rows only
+    *     loses the partition a failed earlier attempt may have left;
+    *  3. delete the staging dir.
+    *
+    * Replay is safe because `foreachBatch` returns before the offset
+    * commit: a crash anywhere in 1–3 replays batch N, and the replay
+    * replaces every route's partition N (and the stale staging dir)
+    * instead of appending duplicates. A `false` from a Hadoop delete or
+    * rename throws, failing the trigger so it replays. Route values must
+    * be plain names (they become path segments; a row routed to a value
+    * `outDirs` lacks fails the write), and every `outDirs` entry must
+    * sit on one filesystem.
     *
     * The partition column is `micro_batch_id`, NOT `batch_id`: the
     * transaction schema declares a DOMAIN `batch_id` string field
-    * (Schemas.scala), and naming the engine column the same would
-    * silently overwrite the source value with the micro-batch number
-    * for every record routed through this sink. */
+    * (Schemas.scala), and a partition of the same name would silently
+    * replace the source value with the micro-batch number for every
+    * record read back from this sink. */
+  def writeBatchIdempotent(batch: DataFrame, route: org.apache.spark.sql.Column,
+                           outDirs: Map[String, String], batchId: Long,
+                           extraPartitions: Seq[String]): Unit = {
+    import org.apache.hadoop.fs.Path
+    val stage = new Path(outDirs.values.head, s".stage_micro_batch_$batchId")
+    val fs = stage.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
+    def deleteIfExists(p: Path): Unit =
+      if (fs.exists(p) && !fs.delete(p, true))
+        throw new java.io.IOException(s"could not delete $p")
+    deleteIfExists(stage) // a failed earlier attempt's staging
+    batch.withColumn(RouteCol, route)
+      .write.partitionBy(RouteCol +: extraPartitions: _*)
+      .parquet(stage.toString)
+    val staged = fs.listStatus(stage).map(_.getPath.getName)
+      .filter(_.startsWith(s"$RouteCol=")).map(_.stripPrefix(s"$RouteCol=")).toSet
+    require(staged.subsetOf(outDirs.keySet),
+      s"rows routed to unknown sinks ${(staged -- outDirs.keySet).mkString(", ")}")
+    outDirs.foreach { case (r, dir) =>
+      val dst = new Path(dir, s"micro_batch_id=$batchId")
+      deleteIfExists(dst)
+      if (staged(r)) {
+        fs.mkdirs(dst.getParent)
+        if (!fs.rename(new Path(stage, s"$RouteCol=$r"), dst))
+          throw new java.io.IOException(s"could not rename the staged $r rows to $dst")
+      }
+    }
+    deleteIfExists(stage)
+  }
+
+  /** One-sink form of the routed write above. */
   def writeBatchIdempotent(batch: DataFrame, outDir: String, batchId: Long,
                            extraPartitions: Seq[String] = Nil): Unit =
-    batch.withColumn("micro_batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("micro_batch_id" +: extraPartitions: _*)
-      .parquet(outDir)
+    writeBatchIdempotent(batch, lit("out"), Map("out" -> outDir), batchId,
+      extraPartitions)
 
   /** Generic exactly-once-style parquet sink: any stream →
     * [[writeBatchIdempotent]] per micro-batch. Checkpoint tracks the

@@ -44,6 +44,35 @@ class EndToEndSpec extends SparkSpec {
     assert(rows.forall(_.getAs[Long]("trigger_ms") >= 0L))
   }
 
+  test("monitor rows keep each trigger's duration parts") {
+    assert(org.apache.spark.sql.Encoders
+      .product[graft.streaming.Monitor.BatchMetric].schema.fieldNames.toSeq === Seq(
+        "query_name", "batch_id", "n_input_rows", "input_rows_per_sec",
+        "processed_rows_per_sec", "trigger_ms", "latest_offset_ms",
+        "query_planning_ms", "add_batch_ms", "wal_commit_ms",
+        "commit_offsets_ms", "n_state_rows"))
+    implicit val sqlCtx = spark.sqlContext
+    val capture = new graft.streaming.Monitor.ProgressCapture
+    spark.streams.addListener(capture)
+    val mem = MemoryStream[Int]
+    val q = mem.toDF().writeStream.format("noop")
+      .queryName("monitor_parts").outputMode("append").start()
+    try {
+      mem.addData(1 to 10: _*)
+      q.processAllAvailable()
+    } finally { q.stop(); spark.streams.removeListener(capture) }
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    def rows = capture.snapshot(spark)
+      .filter(col("query_name") === "monitor_parts" && col("n_input_rows") > 0)
+      .collect()
+    while (rows.isEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+    val r = rows.head
+    val parts = Seq("latest_offset_ms", "query_planning_ms", "add_batch_ms",
+      "wal_commit_ms", "commit_offsets_ms").map(r.getAs[Long])
+    assert(parts.forall(_ >= 0L) && r.getAs[Long]("add_batch_ms") > 0L, r)
+    assert(parts.sum <= r.getAs[Long]("trigger_ms"), r)
+  }
+
   test("generator → serde → retry topology → enrich → warehouse → windowed agg") {
     implicit val sqlCtx = spark.sqlContext
     val tmp = Files.createTempDirectory("graft_e2e").toString

@@ -1506,4 +1506,117 @@ class StreamPipelineSpec extends SparkSpec {
       assert(rows === Set((1L, 0L), (2L, 0L), (3L, 1L), (4L, 1L)))
     } finally q.stop()
   }
+
+  private def sinkRows(dir: String): Set[(String, Long)] =
+    spark.read.parquet(dir)
+      .select(col("transaction_id"), col("micro_batch_id").cast("long"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSet
+
+  test("routed idempotent write: a replay of batch N replaces every route's partition N") {
+    val tmp = Files.createTempDirectory("routed_replay").toString
+    val dirs = Map("main" -> s"$tmp/main", "dead" -> s"$tmp/dead")
+    def write(batchId: Long, rows: (String, Boolean)*): Unit =
+      Sources.writeBatchIdempotent(rows.toDF("transaction_id", "ok"),
+        when(col("ok"), "main").otherwise("dead"), dirs, batchId, Nil)
+    write(0L, "T1" -> true, "T2" -> false)
+    write(1L, "T3" -> true, "T4" -> false)
+    // the crash-replay of batch 1 with an altered payload
+    write(1L, "T5" -> true, "T6" -> false, "T7" -> false)
+    assert(sinkRows(dirs("main")) === Set("T1" -> 0L, "T5" -> 1L))
+    assert(sinkRows(dirs("dead")) === Set("T2" -> 0L, "T6" -> 1L, "T7" -> 1L))
+    // an empty replay leaves batch 1 in neither sink
+    write(1L)
+    assert(sinkRows(dirs("main")) === Set("T1" -> 0L))
+    assert(sinkRows(dirs("dead")) === Set("T2" -> 0L))
+  }
+
+  test("S8 dual sink: a replay whose dead route is empty leaves no stale dead partition") {
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = Files.createTempDirectory("graft_dual_replay").toString
+    def start(mem: MemoryStream[(String, String)]) =
+      Sources.dualSinkQuery(StreamPipeline.typed(StreamPipeline.parse(
+        mem.toDF().toDF("key", "value"))), s"$tmp/main", s"$tmp/dead", s"$tmp/ckpt")
+    val mem1 = MemoryStream[(String, String)]
+    val q1 = start(mem1)
+    try {
+      mem1.addData(
+        ("A", txnJson("T1", "ACC1", "deposit", 10.0, "2024-01-01T00:00:00")),
+        ("A", txnJson("T2", "ACC1", "deposit", -5.0, "2024-01-01T00:00:00")))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    assert(sinkRows(s"$tmp/dead") === Set("T2" -> 0L))
+    // crash after the sink write, before the offset commit: batch 0 is
+    // replayed on restart, this time with no invalid row
+    Seq("0", ".0.crc").foreach(f => Files.deleteIfExists(
+      java.nio.file.Paths.get(s"$tmp/ckpt/commits/$f")))
+    val mem2 = MemoryStream[(String, String)]
+    mem2.addData(
+      ("A", txnJson("T1", "ACC1", "deposit", 10.0, "2024-01-01T00:00:00")),
+      ("A", txnJson("T3", "ACC1", "deposit", 7.0, "2024-01-01T00:00:00")))
+    val q2 = start(mem2)
+    try q2.processAllAvailable() finally q2.stop()
+    assert(sinkRows(s"$tmp/main") === Set("T1" -> 0L, "T3" -> 0L))
+    assert(!new java.io.File(s"$tmp/dead/micro_batch_id=0").exists(),
+      "the replay kept the first attempt's dead-letter rows")
+  }
+
+  test("S8 dual sink: outputs carry no route column and no staging residue") {
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = Files.createTempDirectory("graft_dual_layout").toString
+    val mem = MemoryStream[(String, String)]
+    val q = Sources.dualSinkQuery(StreamPipeline.typed(StreamPipeline.parse(
+      mem.toDF().toDF("key", "value"))), s"$tmp/main", s"$tmp/dead", s"$tmp/ckpt")
+    try {
+      Seq(("T1", "T2"), ("T3", "T4")).foreach { case (good, bad) =>
+        mem.addData(
+          ("A", txnJson(good, "ACC1", "deposit", 10.0, "2024-01-01T00:00:00")),
+          ("A", txnJson(bad, "ACC1", "deposit", -5.0, "2024-01-01T00:00:00")))
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    Seq("main", "dead").foreach { d =>
+      val df = spark.read.parquet(s"$tmp/$d")
+      assert(!df.columns.exists(_.startsWith("_")), df.columns.mkString(","))
+      assert(df.count() === 2L)
+      // the listing maybeCompactShardPartials counts partitions with
+      val names = new java.io.File(s"$tmp/$d").list().toSeq.sorted
+      assert(names === Seq("micro_batch_id=0", "micro_batch_id=1"), s"$d: $names")
+    }
+  }
+
+  test("S8 dual sink: one trigger runs one write job") {
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = Files.createTempDirectory("graft_dual_jobs").toString
+    val mem = MemoryStream[(String, String)]
+    val q = Sources.dualSinkQuery(StreamPipeline.typed(StreamPipeline.parse(
+      mem.toDF().toDF("key", "value"))), s"$tmp/main", s"$tmp/dead", s"$tmp/ckpt")
+    val qid = q.id.toString
+    // jobs of this query, snapshotted when its data trigger's progress
+    // event arrives: a listener sees events in posting order, and the
+    // progress event is posted after the trigger's jobs ended
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val atProgress = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("sql.streaming.queryId") == qid))
+          jobs.incrementAndGet()
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case p: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
+              if p.progress.id.toString == qid && p.progress.numInputRows > 0 =>
+            atProgress.compareAndSet(-1, jobs.get())
+          case _ =>
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      mem.addData(
+        ("A", txnJson("T1", "ACC1", "deposit", 10.0, "2024-01-01T00:00:00")),
+        ("A", txnJson("T2", "ACC1", "deposit", -5.0, "2024-01-01T00:00:00")))
+      q.processAllAvailable()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (atProgress.get() < 0 && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(atProgress.get() === 1, "jobs in the dual sink's data trigger")
+    } finally { q.stop(); spark.sparkContext.removeSparkListener(listener) }
+  }
 }
