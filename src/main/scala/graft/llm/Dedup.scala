@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.util.BatchState
 
 /** Deduplication operators for training-data pipelines: exact,
   * n-gram-Jaccard, MinHash+LSH, SimHash.
@@ -261,65 +262,34 @@ object Dedup {
   }
 
   def writeShingleIndex(documents: DataFrame, path: String): Unit = {
-    // batch_id = -1 marks the bulk build; the streaming loop's
-    // per-batch appends land next to it in batch_id = N partitions, so
-    // bulk-built and incrementally-grown indexes share one layout
-    // (partition discovery rejects a dir mixing bare files with
-    // partition subdirs). The lease refuses to START a build over an
-    // index another writer holds; the static overwrite then wipes the
-    // dir INCLUDING the lease — a bulk build is the destructive
-    // provisioning step by definition, not a concurrent-maintenance
-    // one, so protection during it is not claimed.
-    Similarity.acquireIndexLease(documents.sparkSession, path, "build")
-    indexFrame(documents).withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").partitionBy("batch_id").parquet(path)
-    Similarity.releaseIndexLease(documents.sparkSession, path)
+    // micro_batch_id = -1 marks the bulk build; the streaming loop's
+    // per-batch appends land next to it in micro_batch_id = N
+    // partitions (the BatchState layout), so bulk-built and
+    // incrementally-grown indexes share one layout (partition discovery
+    // rejects a dir mixing bare files with partition subdirs). The
+    // lease refuses to START a build over an index another writer
+    // holds; the static overwrite then wipes the dir INCLUDING the
+    // lease — a bulk build is the destructive provisioning step by
+    // definition, not a concurrent-maintenance one, so protection
+    // during it is not claimed.
+    BatchState.acquireLease(documents.sparkSession, path, "build")
+    indexFrame(documents).withColumn(BatchState.PartitionCol, lit(-1L))
+      .write.mode("overwrite").partitionBy(BatchState.PartitionCol).parquet(path)
+    BatchState.releaseLease(documents.sparkSession, path)
   }
 
-  /** Idempotent per-batch index append: rows land in a batch_id=N
-    * partition via dynamic partition overwrite, so a crash-replay of
+  /** Idempotent per-batch index append through
+    * [[BatchState.writeBatchIdempotent]], so a crash-replay of
     * micro-batch N REPLACES its own partition instead of duplicating
-    * it — the exactly-once half of the streaming dedup loop. Takes
-    * the shared index write lease ([[Similarity.acquireIndexLease]] —
-    * one mechanism for every batch-partitioned index): an append
-    * racing [[compactShingleIndex]] fails loudly, a crash-replay of
-    * the same batch reclaims its own lease. The lease file is
-    * dot-prefixed, so partition discovery never sees it. */
+    * it — the exactly-once half of the streaming dedup loop. Takes the
+    * shared state write lease: an append racing
+    * [[BatchState.compactState]] fails loudly, a crash-replay of the
+    * same batch reclaims its own lease. */
   def appendShingleIndexForBatch(documents: DataFrame, path: String,
                                  batchId: Long): Unit = {
-    Similarity.acquireIndexLease(documents.sparkSession, path,
-      s"append:$batchId")
-    indexFrame(documents).withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(path)
-    Similarity.releaseIndexLease(documents.sparkSession, path)
-  }
-
-  /** Shingle-index maintenance — [[Similarity.compactLshIndex]]'s
-    * small-files remedy for the text-dedup index: fold the per-trigger
-    * batch_id partitions a long-running [[graft.streaming.Sources.nearDupDedupQuery]]
-    * accumulates back into the one bulk partition. Mechanics differ
-    * from the LSH compactor only in layout (this index IS one
-    * partitioned dir, so staging/aside live as dot-prefixed children,
-    * which partition discovery ignores): the rewrite stages into
-    * `.compact/`, original batch partitions are renamed ASIDE into
-    * `.old/` — never deleted before the replacement is renamed in —
-    * and a crash at any step leaves the original restorable (entry
-    * rolls `.old/` back when the live dir has lost its partitions).
-    * Mutually exclusive with appends via the shared write lease;
-    * a compaction re-run after a crash reclaims its own lease. */
-  def compactShingleIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Unit = {
-    Similarity.acquireIndexLease(spark, path, "compact")
-    // the swap mechanics (staged rewrite, aside rename, roll-back-first
-    // crash recovery — ADVICE r10: recovery must run whenever .old/ is
-    // non-empty, not only when the root lost ALL its partitions) live
-    // in the shared worker, which round 11 also points at the
-    // streaming ledger and pack states
-    Similarity.compactBatchPartitionsLocked(spark, path)
-    Similarity.releaseIndexLease(spark, path)
+    BatchState.acquireLease(documents.sparkSession, path, s"append:$batchId")
+    BatchState.writeBatchIdempotent(indexFrame(documents), path, batchId)
+    BatchState.releaseLease(documents.sparkSession, path)
   }
 
   /** The persisted shingle index, or None before the first batch has

@@ -404,11 +404,11 @@ object Retrieval {
     phraseSearchOverPostings(spark.table(table), phrases)
 
   /** Probe the STREAMED postings index
-    * ([[graft.streaming.Sources.postingsIndexQuery]]'s batch_id-
-    * partitioned parquet layout) — the identical anchor-count plan;
-    * batch_id is just a partition column the term filter never needs,
-    * and compaction (all rows folded into batch_id=-1) is invisible
-    * here by construction. */
+    * ([[graft.streaming.Sources.postingsIndexQuery]]'s
+    * [[graft.util.BatchState]] layout) — the identical anchor-count
+    * plan; micro_batch_id is just a partition column the term filter
+    * never needs, and compaction (all rows folded into
+    * micro_batch_id=-1) is invisible here by construction. */
   def phraseSearchFromParquetIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, phrases: Seq[String] = Phrases): DataFrame =
     phraseSearchOverPostings(

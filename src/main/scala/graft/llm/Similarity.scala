@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.util.BatchState
 
 /** Embedding similarity search: brute-force cosine top-k as the exact
   * baseline, and an IVF (inverted-file) variant as the scale path.
@@ -403,19 +404,20 @@ object Similarity {
                     numPlanes: Int = AdaptiveWidth): Int = {
     val n = prepared(embeddings).cache()
     val np = resolveWidth(n, numPlanes)
-    acquireIndexLease(embeddings.sparkSession, path, "build")
-    // batch_id = -1 marks the bulk build; streaming appends land in
-    // batch_id = N partitions beside it (the writeShingleIndex layout),
-    // with tbl as the secondary partition so per-table probes prune
+    BatchState.acquireLease(embeddings.sparkSession, path, "build")
+    // micro_batch_id = -1 marks the bulk build; streaming appends land
+    // in micro_batch_id = N partitions beside it (the BatchState
+    // layout), with tbl as the secondary partition so per-table probes
+    // prune
     val b = bucketFrame(n, np)
-    b.withColumn("np", lit(np)).withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").partitionBy("batch_id", "tbl")
+    b.withColumn("np", lit(np)).withColumn(BatchState.PartitionCol, lit(-1L))
+      .write.mode("overwrite").partitionBy(BatchState.PartitionCol, "tbl")
       .parquet(s"$path/buckets")
-    n.withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").partitionBy("batch_id")
+    n.withColumn(BatchState.PartitionCol, lit(-1L))
+      .write.mode("overwrite").partitionBy(BatchState.PartitionCol)
       .parquet(s"$path/vectors")
     b.unpersist(); n.unpersist()
-    releaseIndexLease(embeddings.sparkSession, path)
+    BatchState.releaseLease(embeddings.sparkSession, path)
     np
   }
 
@@ -459,166 +461,6 @@ object Similarity {
     nps.head
   }
 
-  /** Writer-exclusion lease (round 10, VERDICT r9 task 5): compaction
-    * and appends mutate the same directories, and the exclusion
-    * contract used to be documentation-only — a misuse corrupted
-    * silently, against the codebase's fail-loud convention. One lease
-    * file at the index root, acquired by atomic create-if-absent. A
-    * writer finding ITS OWN holder string in an existing lease
-    * RECLAIMS it: a crash-replay of the same micro-batch append, or a
-    * compaction re-run after a crash, is idempotent and must not
-    * deadlock on its own leftover. The lease is released only on
-    * success — a failed writer leaves it naming itself, so the next
-    * CONFLICTING writer fails loudly instead of racing a half-written
-    * index, while the same work item retried goes through. */
-  /** Generic compactor WORKER for any batch_id-partitioned parquet
-    * dir (round 11, VERDICT r10 task 3): fold per-trigger `batch_id=N`
-    * partitions into the one bulk `batch_id=-1` partition. -1 sorts
-    * below every real micro-batch id, so the replay-safety read
-    * filter (`batch_id < currentBatch`) keeps seeing compacted state
-    * as PRIOR state. Caller must hold the write lease covering this
-    * dir — compaction is mutually exclusive with appends, and a live
-    * stream's trigger fails loudly on its own acquire rather than
-    * racing a half-swapped dir. Mechanics = [[graft.llm.Dedup.compactShingleIndex]]'s
-    * staged-rename swap: rewrite into `.compact/`, move originals
-    * ASIDE into `.old/`, rename the replacement in, delete the aside
-    * copy last. Recovery DISCRIMINATES how far the crash got before
-    * touching anything (ADVICE r11): the staged replacement is exactly
-    * ONE partition dir (`batch_id=-1`), so its swap-in is a single
-    * atomic rename, and `.compact/` still holding a partition dir is
-    * the ground truth that the swap has NOT happened — only then are
-    * the originals in `.old/` authoritative and rolled back. If
-    * `.compact/` holds no partition dir while `.old/` does, the swap
-    * COMPLETED and the root already holds the full replacement:
-    * `.old/` is a disposable copy that must be DELETED, never restored
-    * — the unconditional roll-back-first rule this replaces would have
-    * restored the originals BESIDE the complete `-1` replacement and
-    * baked every row in twice on the rerun. Run it only against a
-    * quiesced stream whose last batch committed: folding an
-    * UNCOMMITTED batch's partition into -1 would make a replay of
-    * that batch read its own writes as prior state. */
-  private[graft] def compactBatchPartitionsLocked(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    compactPartitionsLocked(spark, path)
-
-  /** The general lease-guarded partition compactor behind
-    * [[compactBatchPartitionsLocked]] (round 13: parameterized so the
-    * streamed SHARD-SUMMARY artifact — `micro_batch_id=N/shard=M`
-    * layout, with an associative pre-merge of the partials — can ride
-    * the identical swap/recovery protocol instead of growing a
-    * second, subtly different one).
-    *
-    *  - `merge` runs over the selected partitions' rows before the
-    *    staged write — identity for row-preserving state (the LSH
-    *    index), the read-time associative aggregate for partial
-    *    summaries (pre-merging is sound exactly because the read-side
-    *    merge is associative; [[graft.llm.Curate.readTrainingShards]]
-    *    output is unchanged by construction).
-    *  - `uptoExclusive` bounds WHICH partitions fold: an IN-TRIGGER
-    *    occupancy compaction must only fold ids < the current batch
-    *    id — folding the current batch's own partition into -1 would
-    *    double-count it when a crash replays the trigger (the
-    *    partition re-appears beside its copy inside -1), and a
-    *    prior-batch reader's `< batchId` filter must keep matching
-    *    the folded -1 partition. Maintenance calls (stream quiesced)
-    *    pass the default unbounded value.
-    *
-    * Caller must hold the state lease. */
-  private[graft] def compactPartitionsLocked(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      partitionCol: String = "batch_id",
-      extraPartitions: Seq[String] = Seq.empty,
-      merge: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-        identity,
-      uptoExclusive: Long = Long.MaxValue): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val root = new HPath(path)
-    val staged = new HPath(s"$path/.compact")
-    val aside = new HPath(s"$path/.old")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prefix = s"$partitionCol="
-    def partitionDirs(p: HPath): Seq[HPath] =
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-        .map(_.getPath)
-    // crash recovery FIRST. Swap completion is discriminated by where
-    // the staged -1 dir sits: still under .compact/ (swap not
-    // done — originals authoritative, roll .old/ back; a same-name
-    // root dir in this window can only be stale garbage) vs drained
-    // out of it (swap done — root holds the complete replacement,
-    // .old/ is a disposable copy; restoring it would duplicate every
-    // row, the ADVICE r11 silent-duplication window).
-    if (partitionDirs(staged).nonEmpty) {
-      partitionDirs(aside).foreach { d =>
-        val back = new HPath(root, d.getName)
-        if (fs.exists(back)) fs.delete(back, true)
-        require(fs.rename(d, back), s"crash recovery rename failed: $d")
-      }
-    }
-    fs.delete(staged, true); fs.delete(aside, true)
-    val selected = partitionDirs(root).filter { d =>
-      scala.util.Try(d.getName.stripPrefix(prefix).toLong)
-        .toOption.exists(_ < uptoExclusive)
-    }
-    if (selected.isEmpty) return
-    merge(spark.read.option("basePath", path)
-        .parquet(selected.map(_.toString): _*))
-      .drop(partitionCol).withColumn(partitionCol, lit(-1L))
-      .write.mode("overwrite")
-      .partitionBy(partitionCol +: extraPartitions: _*)
-      .parquet(staged.toString)
-    fs.mkdirs(aside)
-    def mv(src: HPath, dst: HPath): Unit =
-      require(fs.rename(src, dst), s"compaction rename failed: $src -> $dst")
-    selected.foreach(d => mv(d, new HPath(aside, d.getName)))
-    partitionDirs(staged).foreach(d => mv(d, new HPath(root, d.getName)))
-    fs.delete(aside, true)
-    fs.delete(staged, true)
-  }
-
-  private def indexLease(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/.write_lease")
-
-  private[graft] def acquireIndexLease(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, holder: String): Unit = {
-    val lease = indexLease(path)
-    val fs = lease.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(lease.getParent)
-    val acquired =
-      try {
-        val out = fs.create(lease, false)
-        out.write(holder.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-    if (!acquired) {
-      val existing =
-        try {
-          val in = fs.open(lease)
-          val buf = new Array[Byte](256)
-          val m = in.read(buf)
-          in.close()
-          new String(buf, 0, math.max(0, m),
-            java.nio.charset.StandardCharsets.UTF_8)
-        } catch { case _: java.io.IOException => "<unreadable>" }
-      require(existing == holder,
-        s"LSH index at $path is write-locked by '$existing' (this " +
-          s"writer: '$holder'): compaction and appends are mutually " +
-          s"exclusive — quiesce the other writer first, or delete " +
-          s"$lease by hand if it is stale from a crashed run")
-    }
-  }
-
-  private[graft] def releaseIndexLease(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val lease = indexLease(path)
-    val fs = lease.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(lease, false)
-    ()
-  }
-
   /** ONE width per trigger: the index's stored width, or on cold
     * start the width adaptive to THIS batch — resolved once and passed
     * to both the dedup probe and the append, so the first batch can
@@ -636,9 +478,9 @@ object Similarity {
     * the batch at the given width — streaming callers resolve it ONCE
     * per trigger via [[resolveIndexWidth]]; the default re-resolves
     * from the index (cold start: this frame's adaptive width) — and
-    * land rows in batch_id = N partitions via dynamic partition
-    * overwrite, so a crash-replay of micro-batch N replaces its own
-    * partitions instead of duplicating them. */
+    * land both dirs' rows through [[BatchState.writeBatchIdempotent]],
+    * so a crash-replay of micro-batch N replaces its own partitions
+    * instead of duplicating them. */
   def appendLshIndexForBatch(embeddings: DataFrame, path: String,
                              batchId: Long,
                              numPlanes: Int = AdaptiveWidth): Unit = {
@@ -656,75 +498,12 @@ object Similarity {
       s"appending at width $np to an index stored at width $w would " +
         "mix signature widths (buckets never match across widths); " +
         "pass AdaptiveWidth or the stored width"))
-    acquireIndexLease(spark, path, s"append:$batchId")
-    bucketFrame(n, np, cache = false)
-      .withColumn("np", lit(np)).withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id", "tbl")
-      .parquet(s"$path/buckets")
-    n.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(s"$path/vectors")
-    releaseIndexLease(spark, path)
-  }
-
-  /** Index maintenance: fold the accumulated per-batch partitions
-    * back into one bulk partition (batch_id = -1). A long-running
-    * [[graft.streaming.Sources.semanticDedupQuery]] stream creates one
-    * batch_id partition per trigger; listing cost at read time grows
-    * with trigger count until a compaction pass rewrites the index —
-    * the standard warehouse small-files remedy. The rewrite stages
-    * into `<path>/.compact` first; the swap NEVER deletes before the
-    * replacement is in place — old dirs are renamed ASIDE (`.old`),
-    * the staged dirs renamed in, and only then is anything deleted,
-    * every rename checked — so a crash at any step leaves either the
-    * original or the compacted index fully readable (worst case the
-    * original survives under `.old/<sub>`, restorable by hand; it is
-    * never gone). The stored width column is preserved (compaction
-    * must never change probe semantics). NOT safe to run concurrently
-    * with an active appender — and since round 10 that exclusion is
-    * ENFORCED, not documented: both writers take the index write
-    * lease ([[acquireIndexLease]]), so an appender racing a
-    * compaction fails loudly instead of corrupting silently. A
-    * compaction re-run after a crash reclaims its own lease. */
-  def compactLshIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val staged = new HPath(s"$path/.compact")
-    val aside = new HPath(s"$path/.old")
-    val fs = staged.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    acquireIndexLease(spark, path, "compact")
-    // recover a crashed previous swap FIRST: if a live dir is missing
-    // and its .old copy exists, the .old copy IS the index — restore
-    // it; only then is it safe to clear leftovers
-    for (sub <- Seq("buckets", "vectors")) {
-      val live = new HPath(s"$path/$sub")
-      val old = new HPath(s"$path/.old/$sub")
-      if (!fs.exists(live) && fs.exists(old))
-        require(fs.rename(old, live), s"crash recovery rename failed: $old")
-    }
-    fs.delete(staged, true); fs.delete(aside, true)
-    spark.read.parquet(s"$path/buckets")
-      .withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").partitionBy("batch_id", "tbl")
-      .parquet(s"$path/.compact/buckets")
-    spark.read.parquet(s"$path/vectors")
-      .withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").partitionBy("batch_id")
-      .parquet(s"$path/.compact/vectors")
-    fs.mkdirs(aside)
-    def mv(src: HPath, dst: HPath): Unit =
-      require(fs.rename(src, dst), s"compaction rename failed: $src -> $dst")
-    for (sub <- Seq("buckets", "vectors")) {
-      mv(new HPath(s"$path/$sub"), new HPath(s"$path/.old/$sub"))
-      mv(new HPath(s"$path/.compact/$sub"), new HPath(s"$path/$sub"))
-    }
-    fs.delete(aside, true)
-    fs.delete(staged, true)
-    releaseIndexLease(spark, path)
+    BatchState.acquireLease(spark, path, s"append:$batchId")
+    BatchState.writeBatchIdempotent(
+      bucketFrame(n, np, cache = false).withColumn("np", lit(np)),
+      s"$path/buckets", batchId, Seq("tbl"))
+    BatchState.writeBatchIdempotent(n, s"$path/vectors", batchId)
+    BatchState.releaseLease(spark, path)
   }
 
   /** Incremental near-dup pairs of a micro-BATCH against (index ∪
@@ -768,7 +547,7 @@ object Similarity {
     require(hasBuckets == hasVectors,
       s"half-present LSH index at $path (buckets=$hasBuckets, " +
         s"vectors=$hasVectors) — a crash between the two index writes " +
-        "left it inconsistent; restore from .old/ or rebuild before " +
+        "left it inconsistent; rebuild the index before " +
         "streaming against it")
     val idx = if (hasBuckets) {
       // any read error from here on SURFACES — it is never cold start

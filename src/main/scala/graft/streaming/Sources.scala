@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
+import graft.util.BatchState
+import graft.util.BatchState.writeBatchIdempotent
 
 /** Streaming source/sink wiring — the reference's Kafka topology
   * (`src/spark/transaction_processor.py:154-216`,
@@ -186,11 +188,10 @@ object Sources {
     * index's stored signatures (never a corpus re-hash — see
     * [[graft.llm.Dedup.minhashLshPairsIncremental]]). Cold start: a
     * missing index means the first batch dedups within itself and its
-    * survivors CREATE the index. Exactly-once: the clean sink lands via
-    * [[writeBatchIdempotent]] and the index appends its batch partition
-    * with dynamic overwrite, so a crash-replay of batch N replaces its
-    * own partitions — clean sink and index can never diverge across a
-    * retry. */
+    * survivors CREATE the index. Exactly-once: the clean sink and the
+    * index both land batch N through [[writeBatchIdempotent]], so a
+    * crash-replay of batch N replaces its own partitions — clean sink
+    * and index can never diverge across a retry. */
   def nearDupDedupQuery(docs: DataFrame, indexPath: String, cleanDir: String,
                         checkpoint: String,
                         threshold: Double = 0.8): StreamingQuery =
@@ -240,10 +241,9 @@ object Sources {
     * re-hashed. Cold start: the first batch dedups within itself and
     * its survivors create the index at the batch-adaptive width,
     * which the index then pins for every later batch. Exactly-once:
-    * both sinks partition by micro-batch ([[writeBatchIdempotent]] for
-    * the clean sink, dynamic overwrite of the index's batch_id
-    * partition), so a crash-replay of batch N replaces its own
-    * partitions. */
+    * the clean sink and both index dirs land batch N through
+    * [[writeBatchIdempotent]], so a crash-replay of batch N replaces
+    * its own partitions. */
   def semanticDedupQuery(emb: DataFrame, indexPath: String, cleanDir: String,
                          checkpoint: String,
                          threshold: Double = 0.9,
@@ -298,10 +298,10 @@ object Sources {
     * cannot know — the curation-ledger schema caveat). Per-trigger
     * cost: |batch| map-only parsing + one key join against stored
     * state; no pair expansion at any mirror density. Exactly-once:
-    * verdicts land via [[writeBatchIdempotent]]; novel keys append
-    * into batch_id partitions read back with the `batch_id <
-    * currentBatch` replay filter; the state root's write lease makes
-    * appends and [[compactUrlState]] mutually exclusive. */
+    * verdicts and novel keys land via [[writeBatchIdempotent]], and
+    * the keys are read back through [[BatchState.priorState]]'s replay
+    * filter; the state root's write lease makes appends and
+    * [[BatchState.compactState]] mutually exclusive. */
   def urlDedupQuery(docs: DataFrame, statePath: String, outDir: String,
                     checkpoint: String): StreamingQuery =
     docs.writeStream
@@ -317,23 +317,15 @@ object Sources {
           // require must reach the finally's unpersist, or the failed
           // trigger leaks the persisted batch in the executor cache
           // for the lifetime of the stopped query
-          graft.llm.Similarity.acquireIndexLease(
-            spark, statePath, s"append:$batchId")
+          BatchState.acquireLease(spark, statePath, s"append:$batchId")
           val parsed = batch.filter(col("doc_id").isNotNull)
             .withColumn("u",
               call_function("url_parts", expr(graft.llm.Curate.UrlGenSql)))
             .select(col("doc_id"), col("u.domain").as("domain"),
               col("u.path").as("path"))
-          val p = new org.apache.hadoop.fs.Path(statePath)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val hasData = fs.exists(p) && fs.listStatus(p).exists(s =>
-            s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-          val seen =
-            if (hasData)
-              spark.read.parquet(statePath)
-                .filter(col("batch_id") < lit(batchId))
-                .select("domain", "path")
-            else Seq.empty[(String, String)].toDF("domain", "path")
+          val seen = BatchState.priorState(spark, statePath, batchId)
+            .fold(Seq.empty[(String, String)].toDF("domain", "path"))(
+              _.select("domain", "path"))
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy("domain", "path")
           val verdict = parsed
@@ -349,23 +341,11 @@ object Sources {
             .join(seen, Seq("domain", "path"), "left_anti")
             .localCheckpoint() // sever the statePath read before writing it
           writeBatchIdempotent(verdict, outDir, batchId)
-          novel.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(statePath)
-          graft.llm.Similarity.releaseIndexLease(spark, statePath)
+          writeBatchIdempotent(novel, statePath, batchId)
+          BatchState.releaseLease(spark, statePath)
         } finally { batch.unpersist(); () }
       }
       .start()
-
-  /** Small-files maintenance for the URL-key state: same contract as
-    * [[compactPackState]] (quiesced stream only, lease-enforced). */
-  def compactUrlState(spark: SparkSession, statePath: String): Unit = {
-    graft.llm.Similarity.acquireIndexLease(spark, statePath, "compact")
-    graft.llm.Similarity.compactBatchPartitionsLocked(spark, statePath)
-    graft.llm.Similarity.releaseIndexLease(spark, statePath)
-  }
 
   /** Streaming CURATION LEDGER (round 10, VERDICT r9 task 7) — the
     * cross-modal keep/drop artifact
@@ -385,10 +365,10 @@ object Sources {
     * incremental artifact cannot know ahead of future arrivals — the
     * one declared schema difference). Exactly-once: ledger rows land
     * via [[writeBatchIdempotent]]; each index appends only fingerprints
-    * NOVEL relative to previous batches into batch_id partitions with
-    * dynamic overwrite, so a crash-replay of batch N reproduces its
-    * own partitions byte-identically. Eager localCheckpoints stop the
-    * index appends from re-running lineage that reads the same paths. */
+    * NOVEL relative to previous batches, in one routed
+    * [[writeBatchIdempotent]] for all three, so a crash-replay of batch
+    * N replaces its own partitions. An eager localCheckpoint stops the
+    * index append from re-running lineage that reads the same paths. */
   def curationLedgerQuery(docs: DataFrame, statePath: String,
                           ledgerDir: String,
                           checkpoint: String): StreamingQuery =
@@ -407,15 +387,14 @@ object Sources {
           // conflict failure still reaches the finally's unpersist.
           // The trigger's own crash-replay reclaims its same-holder
           // lease.
-          graft.llm.Similarity.acquireIndexLease(
-            spark, statePath, s"append:$batchId")
+          BatchState.acquireLease(spark, statePath, s"append:$batchId")
           val (ledger, novels) = ledgerVerdictForBatch(batch, statePath, batchId)
           writeBatchIdempotent(ledger, ledgerDir, batchId)
           writeLedgerNovels(novels, statePath, batchId)
           // released only on success: a failed trigger leaves the
           // lease naming this batch, so a CONFLICTING writer (the
           // compactor) fails loudly while the replay goes through
-          graft.llm.Similarity.releaseIndexLease(spark, statePath)
+          BatchState.releaseLease(spark, statePath)
         } finally { batch.unpersist(); () }
       }
       .start()
@@ -424,40 +403,26 @@ object Sources {
     * 12) so the streaming shard writer ([[trainingShardsQuery]]) can
     * resolve the SAME incremental keep/drop verdicts against its own
     * state root: returns the batch's ledger verdict frame plus the
-    * per-modality NOVEL fingerprints to append ((sub-dir, frame)
-    * pairs — written by [[writeLedgerNovels]] under the caller's
-    * lease). Both returned frames are eagerly localCheckpointed: the
-    * caller writes INTO the same state paths this computation reads. */
+    * NOVEL fingerprints to append, tagged with their modality's
+    * sub-dir as the route (written by [[writeLedgerNovels]] under the
+    * caller's lease). Both returned frames are eagerly
+    * localCheckpointed: the caller writes INTO the same state paths
+    * this computation reads. */
   private[streaming] def ledgerVerdictForBatch(
       batch: DataFrame, statePath: String, batchId: Long)
-    : (DataFrame, Seq[(String, DataFrame)]) = {
+    : (DataFrame, DataFrame) = {
         val spark = batch.sparkSession
         import spark.implicits._
         {
           val base = batch.filter(col("doc_id").isNotNull)
 
-          // "seen" = indexed by a PRIOR batch only. The filter on the
-          // batch_id partition column is the replay-safety boundary
-          // (ADVICE r10): a crash after batch N's novel-fingerprint
-          // write but before the checkpoint commit leaves N's own
-          // partition on disk, and an unfiltered read on replay would
-          // see N's fingerprints as already-indexed, flipping every
-          // keep verdict in the batch to false before the idempotent
-          // ledger overwrite makes the wrong verdicts permanent.
-          // Partition pruning makes the filter free.
-          def seenFps(sub: String): DataFrame = {
-            val p = new org.apache.hadoop.fs.Path(s"$statePath/$sub")
-            val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            // explicit partition-dir check, not bare existence: the
-            // index dir may hold only dot-entries (compaction staging
-            // remnants) and schema inference over zero files throws
-            val hasData = fs.exists(p) && fs.listStatus(p).exists(s =>
-              s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-            if (hasData)
-              spark.read.parquet(p.toString)
-                .filter(col("batch_id") < lit(batchId)).select("fp")
-            else Seq.empty[String].toDF("fp")
-          }
+          // "seen" = indexed by a PRIOR batch only: read on replay, N's
+          // own crashed partition would flip every keep verdict in the
+          // batch to false before the idempotent ledger overwrite makes
+          // the wrong verdicts permanent (ADVICE r10)
+          def seenFps(sub: String): DataFrame =
+            BatchState.priorState(spark, s"$statePath/$sub", batchId)
+              .fold(Seq.empty[String].toDF("fp"))(_.select("fp"))
           // keep(fp-grain) = first holder of the fingerprint: absent
           // from the index AND min doc_id within the batch (the same
           // min-id rule the batch ledger's window applies corpus-wide)
@@ -508,74 +473,23 @@ object Sources {
                 col("audio_keep") && !col("is_slideshow")).as("keep"))
             .localCheckpoint()
           val novels = Seq("text" -> textNovel, "image" -> imageNovel,
-            "audio" -> audioNovel).map { case (sub, df) =>
-            sub -> df.localCheckpoint() // sever the read of statePath/sub
-          }
+              "audio" -> audioNovel)
+            .map { case (sub, df) => df.withColumn(BatchState.RouteCol, lit(sub)) }
+            .reduce(_ union _)
+            .localCheckpoint() // sever the reads of statePath's indexes
           (ledger, novels)
         }
   }
 
-  /** Append the batch's novel fingerprints into their per-modality
-    * batch_id partitions — dynamic overwrite, so a crash-replay of
-    * batch N reproduces its own partitions byte-identically. Caller
-    * must hold the state root's write lease. */
-  private def writeLedgerNovels(novels: Seq[(String, DataFrame)],
-                                statePath: String, batchId: Long): Unit =
-    novels.foreach { case (sub, df) =>
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(s"$statePath/$sub")
-    }
+  /** Append the batch's novel fingerprints to their modality's index,
+    * all three in one routed [[writeBatchIdempotent]] job. Caller must
+    * hold the state root's write lease. */
+  private def writeLedgerNovels(novels: DataFrame, statePath: String,
+                                batchId: Long): Unit =
+    writeBatchIdempotent(novels, col(BatchState.RouteCol),
+      Seq("text", "image", "audio").map(m => m -> s"$statePath/$m").toMap,
+      batchId, Nil)
 
-  /** Small-files maintenance for the streaming curation ledger's three
-    * fingerprint indexes (round 11, VERDICT r10 task 3): fold every
-    * per-trigger `batch_id=N` partition under `statePath/{text,image,
-    * audio}` into the bulk `batch_id=-1` partition — the
-    * [[graft.llm.Dedup.compactShingleIndex]] remedy applied to the two
-    * remaining accumulating states. Read-back identical (compaction
-    * moves rows, never changes them; -1 still passes the replay filter
-    * `batch_id < currentBatch`). Run only against a QUIESCED stream
-    * whose last batch committed — enforced fail-loud by the shared
-    * write lease at the state root, which the per-trigger appends also
-    * take. */
-  def compactCurationState(spark: SparkSession, statePath: String): Unit = {
-    graft.llm.Similarity.acquireIndexLease(spark, statePath, "compact")
-    Seq("text", "image", "audio").foreach { sub =>
-      val p = new org.apache.hadoop.fs.Path(s"$statePath/$sub")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p))
-        graft.llm.Similarity.compactBatchPartitionsLocked(spark, p.toString)
-    }
-    graft.llm.Similarity.releaseIndexLease(spark, statePath)
-  }
-
-  /** Streaming TRAINING-SHARD WRITER (round 12, VERDICT r11 task 5) —
-    * the capstone composition maintained incrementally: each
-    * micro-batch of documents resolves its cross-modal keep/drop
-    * verdicts against the persisted fingerprint indexes
-    * ([[ledgerVerdictForBatch]] — the curation-ledger state machinery
-    * verbatim), applies the SAME document-local quality gate as the
-    * batch capstone ([[graft.llm.Curate.qualityKept]] — stateless, no
-    * index needed), packs the survivors against per-language
-    * survivor-token bases carried as batch deltas under
-    * `statePath/pack` (the [[packSequencesQuery]] recipe), and lands
-    * the per-(lang, seq_id) PARTIAL sequence summaries
-    * ([[graft.llm.Curate.shardSummary]] — the one shared shard/sort-key
-    * definition) under `micro_batch_id=N/shard=M` partitions.
-    *
-    * The artifact's read contract is
-    * [[graft.llm.Curate.readTrainingShards]]: a sequence spanning a
-    * trigger boundary has one partial row per touching batch, merged
-    * associatively at read time — under monotone-id arrival the merged
-    * rows are IDENTICAL to a batch [[graft.llm.Curate.writeTrainingShards]]
-    * over everything streamed (unit-asserted, including crash replay).
-    * Exactly-once: summaries land via [[writeBatchIdempotent]]; the
-    * fingerprint and pack states append batch_id partitions read back
-    * with the `batch_id < currentBatch` replay filter; all four state
-    * dirs share the one write lease at the state root, mutually
-    * exclusive with [[compactShardState]]. */
   /** Occupancy bound of the streamed shard/pack state (round 13,
     * VERDICT r12 task 6): when a trigger finds MORE than this many
     * per-batch partial partitions, it folds the prior batches into
@@ -608,29 +522,60 @@ object Sources {
     * and `currentBatchId` = the trigger's own (uncommitted) batch id:
     * only ids < it fold, because folding the current batch's partition
     * into -1 would double-count it on crash-replay (the replayed
-    * dynamic overwrite re-creates the partition BESIDE its copy
-    * inside -1) — the packSequencesQuery replay-safety rule extended
-    * to compaction. */
+    * write re-creates the partition BESIDE its copy inside -1) — the
+    * packSequencesQuery replay-safety rule extended to compaction. */
   private[graft] def maybeCompactShardPartials(
       spark: SparkSession, shardDir: String, packPath: String,
       currentBatchId: Long,
-      maxPartials: Int = ShardPartialMaxPartitions): Unit = {
-    def nPartitions(path: String, prefix: String): Int = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) 0
-      else fs.listStatus(p).count(s =>
-        s.isDirectory && s.getPath.getName.startsWith(prefix))
-    }
-    if (nPartitions(shardDir, "micro_batch_id=") > maxPartials)
-      graft.llm.Similarity.compactPartitionsLocked(spark, shardDir,
-        partitionCol = "micro_batch_id", extraPartitions = Seq("shard"),
-        merge = mergeShardPartials, uptoExclusive = currentBatchId)
-    if (nPartitions(packPath, "batch_id=") > maxPartials)
-      graft.llm.Similarity.compactPartitionsLocked(spark, packPath,
-        merge = mergePackDeltas, uptoExclusive = currentBatchId)
+      maxPartials: Int = ShardPartialMaxPartitions): Unit =
+    Seq(shardDir -> mergeShardPartials _, packPath -> mergePackDeltas _)
+      .foreach { case (dir, merge) =>
+        if (BatchState.partitions(spark, dir).size > maxPartials)
+          BatchState.compactPartitionsLocked(spark, dir, merge, currentBatchId)
+      }
+
+  /** Per-lang token bases: the sum of PRIOR batches' survivor-token
+    * deltas only (ADVICE r10). Batch N's own delta partition survives
+    * a crash-before-commit, and counting it on replay would start N's
+    * packing shifted by N's own token mass — wrong seq_id /
+    * n_seqs_spanned overlapping batch N+1. */
+  private def packBases(spark: SparkSession, packPath: String,
+                        batchId: Long): DataFrame = {
+    import spark.implicits._
+    BatchState.priorState(spark, packPath, batchId)
+      .fold(Seq.empty[(String, Long)].toDF("lang", "base_tokens"))(
+        _.groupBy("lang").agg(sum(col("batch_tokens")).as("base_tokens")))
   }
 
+  /** Batch N's per-lang token delta, the pack state's row format. */
+  private def packDelta(packed: DataFrame): DataFrame =
+    packed.groupBy("lang").agg(sum(col("n_tokens")).as("batch_tokens"))
+
+  /** Streaming TRAINING-SHARD WRITER (round 12, VERDICT r11 task 5) —
+    * the capstone composition maintained incrementally: each
+    * micro-batch of documents resolves its cross-modal keep/drop
+    * verdicts against the persisted fingerprint indexes
+    * ([[ledgerVerdictForBatch]] — the curation-ledger state machinery
+    * verbatim), applies the SAME document-local quality gate as the
+    * batch capstone ([[graft.llm.Curate.qualityKept]] — stateless, no
+    * index needed), packs the survivors against per-language
+    * survivor-token bases carried as batch deltas under
+    * `statePath/pack` (the [[packSequencesQuery]] recipe), and lands
+    * the per-(lang, seq_id) PARTIAL sequence summaries
+    * ([[graft.llm.Curate.shardSummary]] — the one shared shard/sort-key
+    * definition) under `micro_batch_id=N/shard=M` partitions.
+    *
+    * The artifact's read contract is
+    * [[graft.llm.Curate.readTrainingShards]]: a sequence spanning a
+    * trigger boundary has one partial row per touching batch, merged
+    * associatively at read time — under monotone-id arrival the merged
+    * rows are IDENTICAL to a batch [[graft.llm.Curate.writeTrainingShards]]
+    * over everything streamed (unit-asserted, including crash replay).
+    * Exactly-once: summaries and the fingerprint and pack states all
+    * land via [[writeBatchIdempotent]], and the states are read back
+    * through [[BatchState.priorState]]'s replay filter; all four state
+    * dirs share the one write lease at the state root, mutually
+    * exclusive with [[BatchState.compactState]]. */
   def trainingShardsQuery(docs: DataFrame, statePath: String,
                           shardDir: String, checkpoint: String,
                           shards: Int = graft.llm.Curate.NumShards,
@@ -641,12 +586,10 @@ object Sources {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        import spark.implicits._
         batch.persist()
         try {
           // lease FIRST inside the try (see curationLedgerQuery)
-          graft.llm.Similarity.acquireIndexLease(
-            spark, statePath, s"append:$batchId")
+          BatchState.acquireLease(spark, statePath, s"append:$batchId")
           // occupancy-triggered fold of PRIOR batches' partials (the
           // round-13 growth bound); holds the lease this trigger owns
           maybeCompactShardPartials(spark, shardDir, s"$statePath/pack",
@@ -658,36 +601,18 @@ object Sources {
             .join(graft.llm.Curate.qualityKept(batch).select("doc_id"),
               Seq("doc_id"), "left_semi")
           val packPath = s"$statePath/pack"
-          val p = new org.apache.hadoop.fs.Path(packPath)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val hasData = fs.exists(p) && fs.listStatus(p).exists(s =>
-            s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-          // bases sum PRIOR batches' survivor-token deltas only — the
-          // packSequencesQuery replay-safety rule: batch N's own delta
-          // must not shift its replayed packing
-          val bases =
-            if (hasData)
-              spark.read.parquet(packPath)
-                .filter(col("batch_id") < lit(batchId)).groupBy("lang")
-                .agg(sum(col("batch_tokens")).as("base_tokens"))
-            else Seq.empty[(String, Long)].toDF("lang", "base_tokens")
           // eager localCheckpoint: the delta write below must not
           // re-run a lineage that READS packPath while writing to it
-          val packed = graft.llm.Curate.packBatchWithBases(survivors, bases)
+          val packed = graft.llm.Curate.packBatchWithBases(survivors,
+              packBases(spark, packPath, batchId))
             .localCheckpoint()
           writeBatchIdempotent(
             graft.llm.Curate.shardSummary(packed, shards),
             shardDir, batchId, extraPartitions = Seq("shard"))
           writeLedgerNovels(novels, statePath, batchId)
-          packed.groupBy("lang")
-            .agg(sum(col("n_tokens")).as("batch_tokens"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(packPath)
+          writeBatchIdempotent(packDelta(packed), packPath, batchId)
           // released only on success (fail-loud conflict semantics)
-          graft.llm.Similarity.releaseIndexLease(spark, statePath)
+          BatchState.releaseLease(spark, statePath)
         } finally { batch.unpersist(); () }
       }
       .start()
@@ -699,10 +624,10 @@ object Sources {
     * own documents (map-only posexplode — a document's postings never
     * depend on any other document, so there is NO cross-batch state
     * read and no replay filter to need) and appends (term, doc_id,
-    * pos) rows into a `batch_id=N` partition with dynamic overwrite,
-    * so a crash-replay of batch N replaces its own partition instead
-    * of duplicating postings. Appends and [[compactPostingsState]]
-    * are mutually exclusive via the shared write lease. Probes
+    * pos) rows through [[writeBatchIdempotent]], so a crash-replay of
+    * batch N replaces its own partition instead of duplicating
+    * postings. Appends and [[BatchState.compactState]] are mutually
+    * exclusive via the shared write lease. Probes
     * ([[graft.llm.Retrieval.phraseSearchFromParquetIndex]]) run the
     * same anchor-count plan as every other postings source; the term
     * filter prunes at the scan. */
@@ -715,46 +640,18 @@ object Sources {
         val spark = batch.sparkSession
         batch.persist()
         try {
-          graft.llm.Similarity.acquireIndexLease(
-            spark, statePath, s"append:$batchId")
-          batch.filter(col("doc_id").isNotNull)
-            .select(col("doc_id"),
-              posexplode(graft.llm.TextPrep.wordsCol))
-            .toDF("doc_id", "pos", "term")
-            .select(col("term"), col("doc_id"), col("pos"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(statePath)
-          graft.llm.Similarity.releaseIndexLease(spark, statePath)
+          BatchState.acquireLease(spark, statePath, s"append:$batchId")
+          writeBatchIdempotent(
+            batch.filter(col("doc_id").isNotNull)
+              .select(col("doc_id"),
+                posexplode(graft.llm.TextPrep.wordsCol))
+              .toDF("doc_id", "pos", "term")
+              .select(col("term"), col("doc_id"), col("pos")),
+            statePath, batchId)
+          BatchState.releaseLease(spark, statePath)
         } finally { batch.unpersist(); () }
       }
       .start()
-
-  /** Small-files maintenance for the streamed postings index — the
-    * generic batch-partition fold, lease-enforced like every
-    * compactor here. Quiesced-stream-only. */
-  def compactPostingsState(spark: SparkSession, statePath: String): Unit = {
-    graft.llm.Similarity.acquireIndexLease(spark, statePath, "compact")
-    graft.llm.Similarity.compactBatchPartitionsLocked(spark, statePath)
-    graft.llm.Similarity.releaseIndexLease(spark, statePath)
-  }
-
-  /** Small-files maintenance for the shard writer's four state dirs
-    * (three fingerprint indexes + the pack deltas) — the
-    * [[compactCurationState]] sweep plus `pack`, under the one shared
-    * lease. Quiesced-stream-only, like every compactor here. */
-  def compactShardState(spark: SparkSession, statePath: String): Unit = {
-    graft.llm.Similarity.acquireIndexLease(spark, statePath, "compact")
-    Seq("text", "image", "audio", "pack").foreach { sub =>
-      val p = new org.apache.hadoop.fs.Path(s"$statePath/$sub")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p))
-        graft.llm.Similarity.compactBatchPartitionsLocked(spark, p.toString)
-    }
-    graft.llm.Similarity.releaseIndexLease(spark, statePath)
-  }
 
   /** Streaming SEQUENCE PACKING — the concat-and-cut training-batch
     * assignment ([[graft.llm.Curate.packSequences]]) maintained
@@ -768,7 +665,8 @@ object Sources {
     * + one lang-cardinality join; streamed output is row-identical to
     * a batch repack of everything streamed (unit-asserted). State
     * reads grow with trigger count until compacted — the same
-    * small-files trade as the LSH index, and the same remedy applies. */
+    * small-files trade as the LSH index, and the same remedy
+    * ([[BatchState.compactState]]) applies. */
   def packSequencesQuery(docs: DataFrame, statePath: String,
                          packedDir: String,
                          checkpoint: String): StreamingQuery =
@@ -777,7 +675,6 @@ object Sources {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        import spark.implicits._
         batch.persist()
         try {
           // lease FIRST inside the try (see curationLedgerQuery): a
@@ -785,124 +682,19 @@ object Sources {
           // could read half-swapped state, and the conflict failure
           // must still reach the finally's unpersist (ADVICE r11);
           // the trigger's own replay reclaims its holder string
-          graft.llm.Similarity.acquireIndexLease(
-            spark, statePath, s"append:$batchId")
-          val p = new org.apache.hadoop.fs.Path(statePath)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          // Bases sum PRIOR batches' deltas only (ADVICE r10): batch
-          // N's own delta partition survives a crash-before-commit,
-          // and an unfiltered sum on replay would start N's packing at
-          // cum_before shifted by N's own token mass — wrong
-          // seq_id/n_seqs_spanned overlapping batch N+1. The delta
-          // WRITE is idempotent; the read must not double-count it.
-          // Partition-dir check, not bare existence: the dir may hold
-          // only the lease dot-file on a first-trigger replay.
-          val hasData = fs.exists(p) && fs.listStatus(p).exists(s =>
-            s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-          val bases =
-            if (hasData)
-              spark.read.parquet(statePath)
-                .filter(col("batch_id") < lit(batchId)).groupBy("lang")
-                .agg(sum(col("batch_tokens")).as("base_tokens"))
-            else Seq.empty[(String, Long)].toDF("lang", "base_tokens")
+          BatchState.acquireLease(spark, statePath, s"append:$batchId")
           // eager localCheckpoint: the delta write below must not
           // re-run a lineage that READS statePath while writing to it
-          val packed = graft.llm.Curate.packBatchWithBases(batch, bases)
+          val packed = graft.llm.Curate.packBatchWithBases(batch,
+              packBases(spark, statePath, batchId))
             .localCheckpoint()
           writeBatchIdempotent(packed, packedDir, batchId)
-          packed.groupBy("lang")
-            .agg(sum(col("n_tokens")).as("batch_tokens"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(statePath)
+          writeBatchIdempotent(packDelta(packed), statePath, batchId)
           // released only on success (fail-loud conflict semantics)
-          graft.llm.Similarity.releaseIndexLease(spark, statePath)
+          BatchState.releaseLease(spark, statePath)
         } finally { batch.unpersist(); () }
       }
       .start()
-
-  /** Small-files maintenance for the pack-state deltas (round 11,
-    * VERDICT r10 task 3): per-trigger `batch_id=N` delta partitions
-    * fold into the bulk `batch_id=-1` partition. The state's
-    * read-time contract (total = SUM over partitions) is preserved —
-    * compaction moves delta rows without merging or changing them —
-    * and -1 still passes the replay filter. Quiesced-stream-only,
-    * enforced fail-loud by the shared lease the delta writes take. */
-  def compactPackState(spark: SparkSession, statePath: String): Unit = {
-    graft.llm.Similarity.acquireIndexLease(spark, statePath, "compact")
-    graft.llm.Similarity.compactBatchPartitionsLocked(spark, statePath)
-    graft.llm.Similarity.releaseIndexLease(spark, statePath)
-  }
-
-  /** Staged-only route column of [[writeBatchIdempotent]]; the rename
-    * drops it, so no sink's rows carry it. */
-  private val RouteCol = "_route"
-
-  /** The idempotent-replay write used by every exactly-once file sink
-    * here. Each row goes to the sink its `route` value names in
-    * `outDirs`, and each sink gets the batch in its own
-    * `outDir/micro_batch_id=N[/extra=K]` partition. All routes land in
-    * ONE write job, then commit by stage-delete-rename:
-    *
-    *  1. write the batch once, partitioned by route and
-    *     `extraPartitions`, into a hidden per-batch staging dir
-    *     (`.stage_micro_batch_N` under the first route's dir; Spark and
-    *     pyarrow skip dot-dirs, so a reader never sees it);
-    *  2. per route, delete `outDir/micro_batch_id=N` and rename the
-    *     staged route dir into its place — a route with no rows only
-    *     loses the partition a failed earlier attempt may have left;
-    *  3. delete the staging dir.
-    *
-    * Replay is safe because `foreachBatch` returns before the offset
-    * commit: a crash anywhere in 1–3 replays batch N, and the replay
-    * replaces every route's partition N (and the stale staging dir)
-    * instead of appending duplicates. A `false` from a Hadoop delete or
-    * rename throws, failing the trigger so it replays. Route values must
-    * be plain names (they become path segments; a row routed to a value
-    * `outDirs` lacks fails the write), and every `outDirs` entry must
-    * sit on one filesystem.
-    *
-    * The partition column is `micro_batch_id`, NOT `batch_id`: the
-    * transaction schema declares a DOMAIN `batch_id` string field
-    * (Schemas.scala), and a partition of the same name would silently
-    * replace the source value with the micro-batch number for every
-    * record read back from this sink. */
-  def writeBatchIdempotent(batch: DataFrame, route: org.apache.spark.sql.Column,
-                           outDirs: Map[String, String], batchId: Long,
-                           extraPartitions: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val stage = new Path(outDirs.values.head, s".stage_micro_batch_$batchId")
-    val fs = stage.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-    def deleteIfExists(p: Path): Unit =
-      if (fs.exists(p) && !fs.delete(p, true))
-        throw new java.io.IOException(s"could not delete $p")
-    deleteIfExists(stage) // a failed earlier attempt's staging
-    batch.withColumn(RouteCol, route)
-      .write.partitionBy(RouteCol +: extraPartitions: _*)
-      .parquet(stage.toString)
-    val staged = fs.listStatus(stage).map(_.getPath.getName)
-      .filter(_.startsWith(s"$RouteCol=")).map(_.stripPrefix(s"$RouteCol=")).toSet
-    require(staged.subsetOf(outDirs.keySet),
-      s"rows routed to unknown sinks ${(staged -- outDirs.keySet).mkString(", ")}")
-    outDirs.foreach { case (r, dir) =>
-      val dst = new Path(dir, s"micro_batch_id=$batchId")
-      deleteIfExists(dst)
-      if (staged(r)) {
-        fs.mkdirs(dst.getParent)
-        if (!fs.rename(new Path(stage, s"$RouteCol=$r"), dst))
-          throw new java.io.IOException(s"could not rename the staged $r rows to $dst")
-      }
-    }
-    deleteIfExists(stage)
-  }
-
-  /** One-sink form of the routed write above. */
-  def writeBatchIdempotent(batch: DataFrame, outDir: String, batchId: Long,
-                           extraPartitions: Seq[String] = Nil): Unit =
-    writeBatchIdempotent(batch, lit("out"), Map("out" -> outDir), batchId,
-      extraPartitions)
 
   /** Generic exactly-once-style parquet sink: any stream →
     * [[writeBatchIdempotent]] per micro-batch. Checkpoint tracks the

@@ -1565,7 +1565,7 @@ class LlmSpec extends SparkSpec {
     val path = "target/lsh_idx_lease_test"
     llm.Similarity.writeLshIndex(emb, path)
     // simulate a crashed compaction: lease left naming 'compact'
-    llm.Similarity.acquireIndexLease(spark, path, "compact")
+    graft.util.BatchState.acquireLease(spark, path, "compact")
     // a conflicting appender must fail loudly, not race the compactor
     val ex = intercept[IllegalArgumentException] {
       llm.Similarity.appendLshIndexForBatch(
@@ -1574,10 +1574,10 @@ class LlmSpec extends SparkSpec {
     assert(ex.getMessage.contains("write-locked by 'compact'"))
     // the compactor itself RECLAIMS its own lease (crash re-run) and
     // releases it on success...
-    llm.Similarity.compactLshIndex(spark, path)
+    graft.util.BatchState.compactState(spark, path)
     // ...after which the append goes through and releases in turn
     llm.Similarity.appendLshIndexForBatch(emb.limit(5), path, batchId = 7L)
-    llm.Similarity.compactLshIndex(spark, path)
+    graft.util.BatchState.compactState(spark, path)
     spark.catalog.clearCache()
   }
 
@@ -1594,8 +1594,8 @@ class LlmSpec extends SparkSpec {
     // a hand-corrupted mixed-width index is refused by every consumer
     // (localCheckpoint breaks the read-while-write lineage on buckets)
     spark.read.parquet(s"$path/buckets").limit(10).localCheckpoint()
-      .withColumn("np", lit(np + 1)).withColumn("batch_id", lit(99L))
-      .write.mode("append").partitionBy("batch_id", "tbl")
+      .withColumn("np", lit(np + 1)).withColumn("micro_batch_id", lit(99L))
+      .write.mode("append").partitionBy("micro_batch_id", "tbl")
       .parquet(s"$path/buckets")
     val ex2 = intercept[IllegalArgumentException] {
       llm.Similarity.lshNearDupPairsFromIndex(spark, path, 0.3).count()

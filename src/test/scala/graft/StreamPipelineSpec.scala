@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.pipeline.Schemas
+import graft.util.BatchState
 import graft.streaming.{Sessionize, Sources, StreamPipeline}
 import java.sql.Timestamp
 import java.nio.file.Files
@@ -235,11 +236,11 @@ class StreamPipelineSpec extends SparkSpec {
       val before = spark.read.parquet(s"$tmp/idx/buckets")
         .select("vec_id", "tbl", "bucket", "np")
         .as[(Long, Int, Long, Int)].collect().toSet
-      graft.llm.Similarity.compactLshIndex(spark, s"$tmp/idx")
+      BatchState.compactState(spark, s"$tmp/idx")
       val after = spark.read.parquet(s"$tmp/idx/buckets")
       assert(after.select("vec_id", "tbl", "bucket", "np")
         .as[(Long, Int, Long, Int)].collect().toSet === before)
-      assert(after.select("batch_id").distinct().as[Long].collect().toSeq
+      assert(after.select("micro_batch_id").distinct().as[Long].collect().toSeq
         === Seq(-1L), "compaction must leave only the bulk partition")
       assert(graft.llm.Similarity.storedIndexWidth(spark, s"$tmp/idx")
         === Some(np))
@@ -300,23 +301,23 @@ class StreamPipelineSpec extends SparkSpec {
     } finally q.stop()
     // maintenance (round 11): compaction is mutually exclusive with a
     // held append lease, and folds every per-trigger partition into
-    // batch_id=-1 without changing ANY read result
+    // micro_batch_id=-1 without changing ANY read result
     val beforeFps = Seq("text", "image", "audio").map { sub =>
       sub -> spark.read.parquet(s"$tmp/state/$sub").select("fp")
         .as[String].collect().toSet
     }.toMap
-    graft.llm.Similarity.acquireIndexLease(spark, s"$tmp/state", "append:99")
+    BatchState.acquireLease(spark, s"$tmp/state", "append:99")
     val ex = intercept[IllegalArgumentException] {
-      Sources.compactCurationState(spark, s"$tmp/state")
+      BatchState.compactState(spark, s"$tmp/state")
     }
     assert(ex.getMessage.contains("write-locked by 'append:99'"))
-    graft.llm.Similarity.releaseIndexLease(spark, s"$tmp/state")
-    Sources.compactCurationState(spark, s"$tmp/state")
+    BatchState.releaseLease(spark, s"$tmp/state")
+    BatchState.compactState(spark, s"$tmp/state")
     Seq("text", "image", "audio").foreach { sub =>
       val idx = spark.read.parquet(s"$tmp/state/$sub")
       assert(idx.select("fp").as[String].collect().toSet === beforeFps(sub),
         s"compaction changed the $sub fingerprint set")
-      assert(idx.select("batch_id").distinct().as[Long].collect().toSeq
+      assert(idx.select("micro_batch_id").distinct().as[Long].collect().toSeq
         === Seq(-1L), s"$sub must hold only the bulk partition")
     }
   }
@@ -357,12 +358,12 @@ class StreamPipelineSpec extends SparkSpec {
     } finally q.stop()
     // maintenance (round 11): delta compaction preserves the sum-over-
     // partitions contract exactly and leaves only the bulk partition
-    Sources.compactPackState(spark, s"$tmp/state")
+    BatchState.compactState(spark, s"$tmp/state")
     val compacted = spark.read.parquet(s"$tmp/state")
     assert(compacted.groupBy("lang").agg(sum("batch_tokens").as("t"))
       .as[(String, Long)].collect().toMap
       === Map("en" -> 330L, "de" -> 350L, "fr" -> 10L))
-    assert(compacted.select("batch_id").distinct().as[Long].collect().toSeq
+    assert(compacted.select("micro_batch_id").distinct().as[Long].collect().toSeq
       === Seq(-1L))
   }
 
@@ -373,22 +374,22 @@ class StreamPipelineSpec extends SparkSpec {
     val b0 = (0L to 9L).map(i => doc(i, s"unique text $i"))
     val b0df = b0.toDF("doc_id", "text", "lang", "source", "n_chars")
     // simulate the exact on-disk state a REPLAY of batch 0 sees: the
-    // first attempt wrote every novel fingerprint into batch_id=0 of
+    // first attempt wrote every novel fingerprint into micro_batch_id=0 of
     // all three indexes, then died before the checkpoint commit
     // (ADVICE r10). The replayed batch must not read its own crashed
     // partition as "indexed".
     b0df.select(md5(col("text")).as("fp")).distinct()
-      .withColumn("batch_id", lit(0L))
-      .write.partitionBy("batch_id").parquet(s"$tmp/state/text")
+      .withColumn("micro_batch_id", lit(0L))
+      .write.partitionBy("micro_batch_id").parquet(s"$tmp/state/text")
     graft.llm.Multimodal.imageHashes(b0df).toDF()
       .select(format_string("%04x%04x%04x%04x",
         col("b3"), col("b2"), col("b1"), col("b0")).as("fp")).distinct()
-      .withColumn("batch_id", lit(0L))
-      .write.partitionBy("batch_id").parquet(s"$tmp/state/image")
+      .withColumn("micro_batch_id", lit(0L))
+      .write.partitionBy("micro_batch_id").parquet(s"$tmp/state/image")
     graft.llm.Multimodal.audioFpRows(b0df)
       .select(col("audio_fp").as("fp")).distinct()
-      .withColumn("batch_id", lit(0L))
-      .write.partitionBy("batch_id").parquet(s"$tmp/state/audio")
+      .withColumn("micro_batch_id", lit(0L))
+      .write.partitionBy("micro_batch_id").parquet(s"$tmp/state/audio")
     val mem = MemoryStream[(Long, String, String, String, Long)]
     val docs = mem.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
     val q = Sources.curationLedgerQuery(docs, s"$tmp/state", s"$tmp/ledger",
@@ -399,7 +400,7 @@ class StreamPipelineSpec extends SparkSpec {
       val keeps = spark.read.parquet(s"$tmp/ledger")
         .select("doc_id", "text_keep").as[(Long, Boolean)].collect().toMap
       // all ten texts are unique: every replayed verdict keeps. Before
-      // the batch_id < batchId read filter, the replay saw its own
+      // the micro_batch_id < batchId read filter, the replay saw its own
       // crashed fingerprints as prior state and flipped all ten to
       // false — permanently, because the ledger write is an overwrite.
       assert(keeps.size == 10, s"expected 10 ledger rows, got $keeps")
@@ -418,8 +419,8 @@ class StreamPipelineSpec extends SparkSpec {
     // checkpoint never committed. The replay's base read must exclude
     // batch 0's own partition or en packing starts at token 300.
     Seq(("en", 300L), ("de", 50L)).toDF("lang", "batch_tokens")
-      .withColumn("batch_id", lit(0L))
-      .write.partitionBy("batch_id").parquet(s"$tmp/state")
+      .withColumn("micro_batch_id", lit(0L))
+      .write.partitionBy("micro_batch_id").parquet(s"$tmp/state")
     val mem = MemoryStream[(Long, String, String, String, Long)]
     val docs = mem.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
     val q = Sources.packSequencesQuery(docs, s"$tmp/state", s"$tmp/packed",
@@ -589,103 +590,131 @@ class StreamPipelineSpec extends SparkSpec {
     // maintenance: compaction preserves the key set, lease excludes
     val beforeKeys = spark.read.parquet(s"$tmp/state")
       .select("domain", "path").as[(String, String)].collect().toSet
-    Sources.compactUrlState(spark, s"$tmp/state")
+    BatchState.compactState(spark, s"$tmp/state")
     val after = spark.read.parquet(s"$tmp/state")
     assert(after.select("domain", "path").as[(String, String)]
       .collect().toSet === beforeKeys)
-    assert(after.select("batch_id").distinct().as[Long].collect().toSeq
+    assert(after.select("micro_batch_id").distinct().as[Long].collect().toSeq
       === Seq(-1L))
   }
 
-  test("shingle compaction recovery: mid-crash aside partitions roll back, never lost") {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val tmp = Files.createTempDirectory("graft_compact_recover").toString
-    val idx = s"$tmp/idx"
-    def docsDf(rows: (Long, String)*) =
-      rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-    graft.llm.Dedup.appendShingleIndexForBatch(
-      docsDf(1L -> "completely different words here about spark engines today ok"),
-      idx, batchId = 0L)
-    graft.llm.Dedup.appendShingleIndexForBatch(
-      docsDf(2L -> "an entirely novel document with its own unique content words"),
-      idx, batchId = 1L)
-    val before = spark.read.parquet(idx).select("doc_id", "sig").collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
-    // simulate a compaction swap that died MID rename loop: one live
-    // partition moved aside, root still non-empty, and — as in every
-    // real mid-aside crash — the staged replacement still sitting
-    // complete under .compact/ (the aside loop only starts after the
-    // staged write commits; its presence is what tells recovery the
-    // swap-in has NOT happened). The pre-fix recovery guard
-    // (root-must-be-empty) skipped this state and the entry deletes
-    // then destroyed the moved-aside original (ADVICE r10) — silent
-    // loss of batch 0.
-    val fs = new HPath(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new HPath(s"$idx/.old"))
-    fs.mkdirs(new HPath(s"$idx/.compact/batch_id=-1"))
-    assert(fs.rename(new HPath(s"$idx/batch_id=0"),
-      new HPath(s"$idx/.old/batch_id=0")))
-    graft.llm.Dedup.compactShingleIndex(spark, idx)
-    val after = spark.read.parquet(idx)
-    assert(after.select("doc_id", "sig").collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1))).toSet === before,
-      "compaction after a simulated mid-swap crash lost rows")
-    assert(after.select("batch_id").distinct().as[Long].collect().toSeq
-      === Seq(-1L))
-    assert(!fs.exists(new HPath(s"$idx/.old")))
-    assert(!fs.exists(new HPath(s"$idx/.compact")))
-  }
+  /** The inputs of the two compaction crash-recovery specs: a state
+    * root `build` fills with two appended batches, the partitioned dir
+    * inside it where the crash is staged, that dir's partition columns
+    * below micro_batch_id, and the columns whose rows compaction must
+    * keep. The LSH index's `buckets` dir has the nested `tbl`
+    * partition. */
+  private case class CrashInput(kind: String, build: String => Unit,
+                                dir: String => String, nested: Seq[String],
+                                key: Seq[String])
 
-  test("shingle compaction recovery: crash AFTER swap-in deletes the aside copy, never duplicates") {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val tmp = Files.createTempDirectory("graft_compact_postswap").toString
-    val idx = s"$tmp/idx"
-    def docsDf(rows: (Long, String)*) =
-      rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-    graft.llm.Dedup.appendShingleIndexForBatch(
-      docsDf(1L -> "completely different words here about spark engines today ok"),
-      idx, batchId = 0L)
-    graft.llm.Dedup.appendShingleIndexForBatch(
-      docsDf(2L -> "an entirely novel document with its own unique content words"),
-      idx, batchId = 1L)
-    val before = spark.read.parquet(idx).select("doc_id", "sig").collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
-    val beforeCount = spark.read.parquet(idx).count()
-    // simulate a crash in the window AFTER the staged batch_id=-1
-    // swapped in but BEFORE the aside delete finished: root holds ONLY
-    // the complete replacement, .old/ holds every original partition,
-    // .compact/ is drained of partition dirs. The pre-fix recovery
-    // rolled the originals back BESIDE the replacement — every row
-    // duplicated, and the rerun baked the duplicates into the new -1
-    // (ADVICE r11 high). Recovery must recognize the drained .compact/
-    // as swap-complete and DELETE the aside copy instead.
-    val fs = new HPath(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new HPath(s"$idx/.old"))
-    assert(fs.rename(new HPath(s"$idx/batch_id=0"),
-      new HPath(s"$idx/.old/batch_id=0")))
-    assert(fs.rename(new HPath(s"$idx/batch_id=1"),
-      new HPath(s"$idx/.old/batch_id=1")))
-    // the complete replacement the real swap-in would have moved to
-    // the root: the same rows rewritten under batch_id=-1
-    spark.read.parquet(s"$idx/.old")
-      .drop("batch_id").withColumn("batch_id", lit(-1L))
-      .write.partitionBy("batch_id").parquet(s"$idx/.stage_tmp")
-    assert(fs.rename(new HPath(s"$idx/.stage_tmp/batch_id=-1"),
-      new HPath(s"$idx/batch_id=-1")))
-    fs.delete(new HPath(s"$idx/.stage_tmp"), true)
-    fs.mkdirs(new HPath(s"$idx/.compact")) // exists, drained
-    graft.llm.Dedup.compactShingleIndex(spark, idx)
-    val after = spark.read.parquet(idx)
-    assert(after.count() === beforeCount,
-      "post-swap crash recovery duplicated rows")
-    assert(after.select("doc_id", "sig").collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1))).toSet === before)
-    assert(after.select("batch_id").distinct().as[Long].collect().toSeq
-      === Seq(-1L))
-    assert(!fs.exists(new HPath(s"$idx/.old")))
-    assert(!fs.exists(new HPath(s"$idx/.compact")))
+  private val compactionCrashInputs = Seq(
+    CrashInput("shingle", { root =>
+      def docsDf(rows: (Long, String)*) =
+        rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
+          .toDF("doc_id", "text", "lang", "source", "n_chars")
+      graft.llm.Dedup.appendShingleIndexForBatch(
+        docsDf(1L -> "completely different words here about spark engines today ok"),
+        root, batchId = 0L)
+      graft.llm.Dedup.appendShingleIndexForBatch(
+        docsDf(2L -> "an entirely novel document with its own unique content words"),
+        root, batchId = 1L)
+    }, identity, Nil, Seq("doc_id", "sig")),
+    CrashInput("LSH", { root =>
+      val emb = Tables.embeddings(spark, sf())
+        .filter(col("embedding").isNotNull).orderBy("vec_id").limit(4)
+      val ids = emb.select("vec_id").as[Long].collect()
+      graft.llm.Similarity.appendLshIndexForBatch(
+        emb.filter(col("vec_id").isin(ids.take(2): _*)), root, batchId = 0L)
+      graft.llm.Similarity.appendLshIndexForBatch(
+        emb.filter(col("vec_id").isin(ids.drop(2): _*)), root, batchId = 1L)
+    }, root => s"$root/buckets", Seq("tbl"), Seq("vec_id", "tbl", "bucket", "np")))
+
+  private def keyRows(in: CrashInput, df: org.apache.spark.sql.DataFrame) =
+    df.select(in.key.map(col): _*).collect().toSet
+
+  /** The partition column names directly under the compacted `-1`
+    * partition: compaction must keep the nested layout. */
+  private def nestedLayout(fs: org.apache.hadoop.fs.FileSystem, d: String) =
+    fs.listStatus(new org.apache.hadoop.fs.Path(s"$d/micro_batch_id=-1"))
+      .filter(_.isDirectory).map(_.getPath.getName.takeWhile(_ != '=')).toSet
+
+  compactionCrashInputs.foreach { in =>
+    test(s"${in.kind} compaction recovery: mid-crash aside partitions roll back, never lost") {
+      import org.apache.hadoop.fs.{Path => HPath}
+      val tmp = Files.createTempDirectory("graft_compact_recover").toString
+      val idx = s"$tmp/idx"
+      in.build(idx)
+      val d = in.dir(idx)
+      val before = keyRows(in, spark.read.parquet(d))
+      // simulate a compaction swap that died MID rename loop: one live
+      // partition moved aside, root still non-empty, and — as in every
+      // real mid-aside crash — the staged replacement still sitting
+      // complete under .compact/ (the aside loop only starts after the
+      // staged write commits; its presence is what tells recovery the
+      // swap-in has NOT happened). The pre-fix recovery guard
+      // (root-must-be-empty) skipped this state and the entry deletes
+      // then destroyed the moved-aside original (ADVICE r10) — silent
+      // loss of batch 0.
+      val fs = new HPath(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.mkdirs(new HPath(s"$d/.old"))
+      fs.mkdirs(new HPath(s"$d/.compact/micro_batch_id=-1"))
+      assert(fs.rename(new HPath(s"$d/micro_batch_id=0"),
+        new HPath(s"$d/.old/micro_batch_id=0")))
+      BatchState.compactState(spark, idx)
+      val after = spark.read.parquet(d)
+      assert(keyRows(in, after) === before,
+        "compaction after a simulated mid-swap crash lost rows")
+      assert(after.select("micro_batch_id").distinct().as[Long].collect().toSeq
+        === Seq(-1L))
+      assert(nestedLayout(fs, d) === in.nested.toSet)
+      assert(!fs.exists(new HPath(s"$d/.old")))
+      assert(!fs.exists(new HPath(s"$d/.compact")))
+    }
+
+    test(s"${in.kind} compaction recovery: crash AFTER swap-in deletes the aside copy, never duplicates") {
+      import org.apache.hadoop.fs.{Path => HPath}
+      val tmp = Files.createTempDirectory("graft_compact_postswap").toString
+      val idx = s"$tmp/idx"
+      in.build(idx)
+      val d = in.dir(idx)
+      val before = keyRows(in, spark.read.parquet(d))
+      val beforeCount = spark.read.parquet(d).count()
+      // simulate a crash in the window AFTER the staged micro_batch_id=-1
+      // swapped in but BEFORE the aside delete finished: root holds ONLY
+      // the complete replacement, .old/ holds every original partition,
+      // .compact/ is drained of partition dirs. The pre-fix recovery
+      // rolled the originals back BESIDE the replacement — every row
+      // duplicated, and the rerun baked the duplicates into the new -1
+      // (ADVICE r11 high). Recovery must recognize the drained .compact/
+      // as swap-complete and DELETE the aside copy instead.
+      val fs = new HPath(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.mkdirs(new HPath(s"$d/.old"))
+      assert(fs.rename(new HPath(s"$d/micro_batch_id=0"),
+        new HPath(s"$d/.old/micro_batch_id=0")))
+      assert(fs.rename(new HPath(s"$d/micro_batch_id=1"),
+        new HPath(s"$d/.old/micro_batch_id=1")))
+      // the complete replacement the real swap-in would have moved to
+      // the root: the same rows rewritten under micro_batch_id=-1
+      spark.read.parquet(s"$d/.old")
+        .drop("micro_batch_id").withColumn("micro_batch_id", lit(-1L))
+        .write.partitionBy("micro_batch_id" +: in.nested: _*)
+        .parquet(s"$d/.stage_tmp")
+      assert(fs.rename(new HPath(s"$d/.stage_tmp/micro_batch_id=-1"),
+        new HPath(s"$d/micro_batch_id=-1")))
+      fs.delete(new HPath(s"$d/.stage_tmp"), true)
+      fs.mkdirs(new HPath(s"$d/.compact")) // exists, drained
+      BatchState.compactState(spark, idx)
+      val after = spark.read.parquet(d)
+      assert(after.count() === beforeCount,
+        "post-swap crash recovery duplicated rows")
+      assert(keyRows(in, after) === before)
+      assert(after.select("micro_batch_id").distinct().as[Long].collect().toSeq
+        === Seq(-1L))
+      assert(nestedLayout(fs, d) === in.nested.toSet)
+      assert(!fs.exists(new HPath(s"$d/.old")))
+      assert(!fs.exists(new HPath(s"$d/.compact")))
+    }
   }
 
   /** Real corpus rows for the shard-writer tests: the ledger's media
@@ -729,7 +758,7 @@ class StreamPipelineSpec extends SparkSpec {
       "streamed shard artifact diverged from the batch capstone")
     // maintenance: compacting all four state dirs under the shared
     // lease leaves the artifact read-back unchanged
-    Sources.compactShardState(spark, s"$tmp/state")
+    BatchState.compactState(spark, s"$tmp/state")
     assert(rows(graft.llm.Curate.readTrainingShards(spark, s"$tmp/shards"))
       === batch)
   }
@@ -746,21 +775,21 @@ class StreamPipelineSpec extends SparkSpec {
     // (deliberately inflated) pack delta shifts every seq_id, both of
     // which would diverge from the batch capstone below.
     b0df.select(md5(col("text")).as("fp")).distinct()
-      .withColumn("batch_id", lit(0L))
-      .write.partitionBy("batch_id").parquet(s"$tmp/state/text")
+      .withColumn("micro_batch_id", lit(0L))
+      .write.partitionBy("micro_batch_id").parquet(s"$tmp/state/text")
     graft.llm.Multimodal.imageHashes(b0df).toDF()
       .select(format_string("%04x%04x%04x%04x",
         col("b3"), col("b2"), col("b1"), col("b0")).as("fp")).distinct()
-      .withColumn("batch_id", lit(0L))
-      .write.partitionBy("batch_id").parquet(s"$tmp/state/image")
+      .withColumn("micro_batch_id", lit(0L))
+      .write.partitionBy("micro_batch_id").parquet(s"$tmp/state/image")
     graft.llm.Multimodal.audioFpRows(b0df)
       .select(col("audio_fp").as("fp")).distinct()
-      .withColumn("batch_id", lit(0L))
-      .write.partitionBy("batch_id").parquet(s"$tmp/state/audio")
+      .withColumn("micro_batch_id", lit(0L))
+      .write.partitionBy("micro_batch_id").parquet(s"$tmp/state/audio")
     Seq(("en", 99999L), ("de", 99999L), ("fr", 99999L))
       .toDF("lang", "batch_tokens")
-      .withColumn("batch_id", lit(0L))
-      .write.partitionBy("batch_id").parquet(s"$tmp/state/pack")
+      .withColumn("micro_batch_id", lit(0L))
+      .write.partitionBy("micro_batch_id").parquet(s"$tmp/state/pack")
     val mem = MemoryStream[(Long, String, String, String, Long)]
     val docs = mem.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
     val q = Sources.trainingShardsQuery(docs, s"$tmp/state", s"$tmp/shards",
@@ -809,12 +838,12 @@ class StreamPipelineSpec extends SparkSpec {
         // a trigger folds prior partials when count > K, THEN adds its
         // own partition: occupancy after any trigger is <= K + 1
         assert(nPartials(s"$tmp/shards", "micro_batch_id=") <= 3)
-        assert(nPartials(s"$tmp/state/pack", "batch_id=") <= 3)
+        assert(nPartials(s"$tmp/state/pack", "micro_batch_id=") <= 3)
       }
     } finally q.stop()
     // compaction actually fired: the folded base partitions exist
     assert(new java.io.File(s"$tmp/shards/micro_batch_id=-1").exists())
-    assert(new java.io.File(s"$tmp/state/pack/batch_id=-1").exists())
+    assert(new java.io.File(s"$tmp/state/pack/micro_batch_id=-1").exists())
     // the artifact still reads back identical to the batch capstone
     val all = docRows.toDF("doc_id", "text", "lang", "source", "n_chars")
     graft.llm.Curate.writeTrainingShards(all, s"$tmp/batch_shards")
@@ -851,7 +880,7 @@ class StreamPipelineSpec extends SparkSpec {
       // compact BETWEEN triggers while the query is live: the probe
       // and the next trigger's append must both see compacted state
       // transparently
-      Sources.compactPostingsState(spark, s"$tmp/idx")
+      BatchState.compactState(spark, s"$tmp/idx")
       mem.addData(b2: _*)
       q.processAllAvailable()
     } finally q.stop()
@@ -891,8 +920,8 @@ class StreamPipelineSpec extends SparkSpec {
       qU.processAllAvailable(); qL.processAllAvailable()
       // compact BOTH states while the other query is live — the lease
       // is per state root, so a compactor never races the other stream
-      Sources.compactUrlState(spark, s"$tmp/ustate")
-      Sources.compactCurationState(spark, s"$tmp/lstate")
+      BatchState.compactState(spark, s"$tmp/ustate")
+      BatchState.compactState(spark, s"$tmp/lstate")
       // next triggers append against the compacted states
       memU.addData((100L to 199L).map(udoc): _*)
       memL.addData((50L to 99L).map(ldoc): _*)
@@ -911,14 +940,14 @@ class StreamPipelineSpec extends SparkSpec {
       // lease serialization, asserted fail-loud: while a compactor
       // holds the state root's lease, a live trigger must REFUSE to
       // append rather than race the swap
-      graft.llm.Similarity.acquireIndexLease(spark, s"$tmp/ustate", "compact")
+      BatchState.acquireLease(spark, s"$tmp/ustate", "compact")
       memU.addData(udoc(200L))
       val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         qU.processAllAvailable()
       }
       assert(e.getMessage.contains("write-locked"),
         s"expected a lease-conflict failure, got: ${e.getMessage}")
-      graft.llm.Similarity.releaseIndexLease(spark, s"$tmp/ustate")
+      BatchState.releaseLease(spark, s"$tmp/ustate")
     } finally { qU.stop(); qL.stop() }
   }
 
@@ -954,7 +983,7 @@ class StreamPipelineSpec extends SparkSpec {
       val before = spark.read.parquet(s"$tmp/idx")
         .select("doc_id", "sig").collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
-      graft.llm.Similarity.acquireIndexLease(spark, s"$tmp/idx", "compact")
+      BatchState.acquireLease(spark, s"$tmp/idx", "compact")
       val ex = intercept[IllegalArgumentException] {
         graft.llm.Dedup.appendShingleIndexForBatch(
           Seq((99L, "x", "en", "s", 1L))
@@ -962,11 +991,11 @@ class StreamPipelineSpec extends SparkSpec {
           s"$tmp/idx", batchId = 9L)
       }
       assert(ex.getMessage.contains("write-locked by 'compact'"))
-      graft.llm.Dedup.compactShingleIndex(spark, s"$tmp/idx") // reclaims
+      BatchState.compactState(spark, s"$tmp/idx") // reclaims
       val after = spark.read.parquet(s"$tmp/idx")
       assert(after.select("doc_id", "sig").collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1))).toSet === before)
-      assert(after.select("batch_id").distinct().as[Long].collect().toSeq
+      assert(after.select("micro_batch_id").distinct().as[Long].collect().toSeq
         === Seq(-1L), "compaction must leave only the bulk partition")
       // pair generation over the compacted index still works
       assert(graft.llm.Dedup.minhashLshPairsFromIndex(spark, s"$tmp/idx")
@@ -1499,7 +1528,7 @@ class StreamPipelineSpec extends SparkSpec {
       assert(spark.read.parquet(out).count() === 3L)
       // simulate the crash-replay of batch 1 with a partial/altered
       // payload: the micro_batch_id=1 partition must be REPLACED, batch 0 kept
-      Sources.writeBatchIdempotent(
+      BatchState.writeBatchIdempotent(
         Seq((3L, "c"), (4L, "d")).toDF("id", "v"), out, 1L)
       val rows = spark.read.parquet(out)
         .select("id", "micro_batch_id").as[(Long, Long)].collect().toSet
@@ -1516,7 +1545,7 @@ class StreamPipelineSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("routed_replay").toString
     val dirs = Map("main" -> s"$tmp/main", "dead" -> s"$tmp/dead")
     def write(batchId: Long, rows: (String, Boolean)*): Unit =
-      Sources.writeBatchIdempotent(rows.toDF("transaction_id", "ok"),
+      BatchState.writeBatchIdempotent(rows.toDF("transaction_id", "ok"),
         when(col("ok"), "main").otherwise("dead"), dirs, batchId, Nil)
     write(0L, "T1" -> true, "T2" -> false)
     write(1L, "T3" -> true, "T4" -> false)
