@@ -51,8 +51,30 @@ import org.apache.spark.sql.SparkSession
   *    [[graft.Tables]] converts it to µs (the testdata has shipped
   *    both NANOS and MICROS). Set once here so the loaders never
   *    write the session's config; it has no effect on MICROS data.
+  *  - [[localFs]] (`fs.file.impl`, `fs.AbstractFileSystem.file.impl`):
+  *    the `file` scheme's FileSystem and FileContext are [[LocalFs]],
+  *    which sets permissions and checks links in-process. Stock Hadoop
+  *    without its native library forks `chmod` per file create and per
+  *    mkdir and `readlink` twice per FileContext rename, and every
+  *    streamed trigger commits a source-log, offset-WAL and commit entry,
+  *    a state delta and checksum per state partition and the sink's
+  *    parquet: one `txn_stream` benchmark run started 5,732 child
+  *    processes (21 with [[LocalFs]]: Spark's `rm -rf` and two start-up
+  *    commands).
+  *    Measured in a 3 GB-heap JVM on 4 cores, stock vs [[LocalFs]]: a
+  *    checksummed create 6.4 vs 0.44 ms (10 vs 1.0 ms with 4 threads
+  *    creating), a mkdir 2.9 vs 0.05 ms, a FileContext rename 24 vs
+  *    0.25 ms. Permission bits, checksum files, rename semantics and
+  *    outputs are unchanged, and the checkpoint keeps Spark's FileContext
+  *    manager with its atomic fail-if-exists rename.
   */
 object Sessions {
+
+  /** Hadoop keys that install [[LocalFs]] for the `file` scheme; every
+    * session (and the test session) applies them. */
+  val localFs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[LocalFs.FileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Fs].getName)
 
   /** Build the shared session. `tool` names the per-tool block-manager
     * dir (concurrent tools must not share spark.local.dir);
@@ -73,6 +95,7 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", localDir)
       .config("spark.cleaner.referenceTracking.blocking", "false")
+      .config(localFs)
       .getOrCreate()
     graft.functions.GraftFunctions.registerAll(spark)
     spark

@@ -49,8 +49,8 @@ class EndToEndSpec extends SparkSpec {
       .product[graft.streaming.Monitor.BatchMetric].schema.fieldNames.toSeq === Seq(
         "query_name", "batch_id", "n_input_rows", "input_rows_per_sec",
         "processed_rows_per_sec", "trigger_ms", "latest_offset_ms",
-        "query_planning_ms", "add_batch_ms", "wal_commit_ms",
-        "commit_offsets_ms", "n_state_rows"))
+        "get_batch_ms", "query_planning_ms", "add_batch_ms", "wal_commit_ms",
+        "commit_offsets_ms", "n_state_rows", "state_memory_bytes", "watermark"))
     implicit val sqlCtx = spark.sqlContext
     val capture = new graft.streaming.Monitor.ProgressCapture
     spark.streams.addListener(capture)

@@ -20,6 +20,8 @@ object SparkSpec {
       // as in util.Sessions.build: TIMESTAMP(NANOS) parquet reads as long
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // as in util.Sessions.build: the fork-free local filesystem
+      .config(graft.util.Sessions.localFs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // The iterative CC/PageRank loops localCheckpoint() every round and
