@@ -1,19 +1,18 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** One registry of every custom Catalyst function this library adds,
-  * with the two ways to install it:
-  *
-  *  - [[GraftFunctions.registerAll]] on an existing session (what the
-  *    operators call internally, idempotent), or
-  *  - `spark.sql.extensions=graft.functions.GraftExtensions` at session build
-  *    time, which makes the functions available in plain `spark.sql`
-  *    text on every session of the application — the standard way to
-  *    ship library functions to SQL-only users.
+  * and its one install path: [[GraftExtensions]], named by
+  * `spark.sql.extensions` in [[graft.util.Sessions.required]]. Spark applies
+  * the extension whenever it builds a session's state, so the functions
+  * reach the built session, every `newSession()` and the clone each
+  * streaming query's `foreachBatch` runs on, with no call from an
+  * operator. A session built without that conf line has none of them,
+  * and a query using one fails at analysis with an unresolved routine.
   */
 object GraftFunctions {
 
@@ -47,41 +46,6 @@ object GraftFunctions {
     "cms_build" -> (e => CountMinBuild(e(0)).toAggregateExpression()),
     "cms_query" -> (e => CountMinQuery(e(0), e(1))),
     "mg_build" -> (e => MisraGriesBuild(e(0)).toAggregateExpression()))
-
-  /** Sessions already holding graft's functions. Weak keys: a stopped
-    * session must not be pinned in memory by this registry guard. */
-  private val registeredSessions =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** Register every function on a live session. Idempotent AND silent:
-    * re-registering an existing name makes `SimpleFunctionRegistry` log a
-    * "replaced a previously registered function" WARN, and operators call
-    * this on every invocation — in a 96-query bench session that flood was
-    * 100% of the harness's captured output tail (round 3). Idempotency is
-    * keyed on the SESSION, not on name existence: a user temp function
-    * that happens to share a name (e.g. their own `top_k_by`) must not
-    * silently shadow graft's — the first registerAll on a session always
-    * installs graft's builders (the registry logs one replace-WARN per
-    * collision, which is the right notice), and later calls are no-ops.
-    *
-    * The check-and-register is one synchronized block with the guard set
-    * LAST: Bench runs queries on worker threads, and a guard set before
-    * the functions land would let a concurrent caller sail past the
-    * no-op path and execute mid-registration ("undefined function:
-    * top_k_by" — a transient failure the bench would count as real).
-    * The lock is uncontended after a session's first call.
-    */
-  def registerAll(spark: SparkSession): Unit =
-    registeredSessions.synchronized {
-      if (!registeredSessions.containsKey(spark)) {
-        val reg = spark.sessionState.functionRegistry
-        all.foreach { case (name, builder) =>
-          reg.createOrReplaceTempFunction(name, builder, "built-in")
-        }
-        registeredSessions.put(spark, java.lang.Boolean.TRUE)
-      }
-    }
 
   private[functions] def inject(ext: SparkSessionExtensions): Unit =
     all.foreach { case (name, builder) =>

@@ -3,7 +3,6 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -831,11 +830,4 @@ case class UrlParts(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object TextHashExprs {
-  /** Register SQL-callable text-hash functions on a session (idempotent).
-    * Delegates to the single [[GraftFunctions]] registry so the two entry
-    * points can never drift apart. */
-  def register(spark: SparkSession): Unit = GraftFunctions.registerAll(spark)
 }

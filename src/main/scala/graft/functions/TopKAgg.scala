@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -172,7 +171,4 @@ object TopKByScore {
       out
     }
   }
-
-  /** Register SQL-callable `top_k_by(score, id, k)` (idempotent, silent). */
-  def register(spark: SparkSession): Unit = GraftFunctions.registerAll(spark)
 }

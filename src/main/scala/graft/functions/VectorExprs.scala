@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -82,9 +81,4 @@ object DotProductD {
     new IllegalArgumentException(s"dot_d: vector length mismatch ($a vs $b)")
   def nullElement(): IllegalArgumentException =
     new IllegalArgumentException("dot_d: null vector element")
-}
-
-object VectorExprs {
-  /** Register SQL-callable vector functions on a session (idempotent, silent). */
-  def register(spark: SparkSession): Unit = GraftFunctions.registerAll(spark)
 }

@@ -727,7 +727,6 @@ object Curate {
     * Oracle twin is DuckDB's nfc_normalize — both engines implement
     * the same Unicode standard. */
   def normalizeText(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(documents.sparkSession)
     val nfc = call_function("nfc_normalize", col("text"))
     documents
       .select(col("doc_id"),
@@ -772,7 +771,6 @@ object Curate {
   def decontaminateBloom(documents: DataFrame, evalMod: Long = EvalMod,
                          threshold: Double = ContamThreshold,
                          expectedEvalShingles: Long = BloomEstEvalShingles): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(documents.sparkSession)
     // cached: the shingle prep feeds the train side twice and the eval
     // side twice (bloom build + verify join)
     val prep = TextPrep.docShingles(documents)
@@ -800,7 +798,6 @@ object Curate {
     * Tie order (score desc, doc_id asc) matches the oracle's
     * row_number. */
   def qualityTopK(documents: DataFrame, k: Int = QualityK): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(documents.sparkSession)
     TextStats.textStatsUnordered(documents)
       .groupBy("lang")
       .agg(call_function("top_k_by", col("quality_score"), col("doc_id"), lit(k)).as("top"))
@@ -918,7 +915,6 @@ object Curate {
     * the twin's window states declaratively. 48 hash bits (12 hex
     * chars) keep the score exact in the heap's double. */
   def groupSample(documents: DataFrame, k: Int = GroupSampleK): DataFrame = {
-    graft.functions.TopKByScore.register(documents.sparkSession)
     val h = conv(substring(
       md5(concat(lit("gs:"), col("doc_id").cast("string"))), 1, 12),
       16, 10).cast("long")
@@ -1724,7 +1720,6 @@ object Curate {
     * hash-gated, the media-twin recipe applied to markup. */
   def htmlExtract(documents: DataFrame,
                   ordered: Boolean = true): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(documents.sparkSession)
     val core = documents
       .withColumn("x", call_function("html_extract", expr(HtmlGenSql)))
       .select(col("doc_id"),
@@ -1825,7 +1820,6 @@ object Curate {
     * any parser bug — userinfo kept, port left in the host, a
     * miscounted path segment — is a row-level hash miss. */
   def urlParse(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(documents.sparkSession)
     documents
       .withColumn("u", call_function("url_parts", expr(UrlGenSql)))
       .select(col("doc_id"), col("u.scheme").as("scheme"),
@@ -1875,7 +1869,6 @@ object Curate {
     * domain-cardinality (tiny next to the corpus), the standard
     * domain-cap/blocklist input at 100 TB. */
   def domainStats(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(documents.sparkSession)
     documents
       .withColumn("u", call_function("url_parts", expr(UrlGenSql)))
       .select(col("u.domain").as("domain"), col("u.tld").as("tld"),
@@ -1915,7 +1908,6 @@ object Curate {
     * keyed on (domain, path)). */
   def urlDedup(documents: DataFrame,
                ordered: Boolean = true): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(documents.sparkSession)
     val parsed = documents
       .withColumn("u", call_function("url_parts", expr(UrlGenSql)))
       .select(col("doc_id"), col("u.domain").as("domain"),
@@ -1958,8 +1950,6 @@ object Curate {
   def domainCap(documents: DataFrame, k: Int = DomainCapK,
                 ordered: Boolean = true): DataFrame = {
     require(k > 0, s"cap must be positive, got $k")
-    graft.functions.GraftFunctions.registerAll(documents.sparkSession)
-    graft.functions.TopKByScore.register(documents.sparkSession)
     val parsed = documents
       .withColumn("u", call_function("url_parts", expr(UrlGenSql)))
       .select(col("doc_id"), col("u.domain").as("domain"))

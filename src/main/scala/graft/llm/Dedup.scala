@@ -200,16 +200,11 @@ object Dedup {
   val NumBands = 4
   val RowsPerBand: Int = NumHashes / NumBands
 
-  /** MinHash signature columns h0..h{k-1}: per seed i, min over the
-    * doc's shingle set of h_i(sh) = (a(sh) + i·b(sh)) mod P, where a/b
-    * are the md5-derived base hashes from docShingles. Computed by the
-    * native minhash_sigs expression in one pass — row-local, no
+  /** MinHash signature `sig` of NumHashes slots: per seed i, min over
+    * the doc's shingle set of h_i(sh) = (a(sh) + i·b(sh)) mod P, where
+    * a/b are the md5-derived base hashes from docShingles. Computed by
+    * the native minhash_sigs expression in one pass — row-local, no
     * shuffle. */
-  def minhashSignatures(documents: DataFrame): DataFrame =
-    signaturesFrom(TextPrep.docShingles(documents))
-      .select(col("doc_id") +:
-        (0 until NumHashes).map(i => col("sig").getItem(i).as(s"h$i")): _*)
-
   private def signaturesFrom(docsPrep: DataFrame): DataFrame =
     docsPrep.select(col("doc_id"),
       call_function("minhash_sigs", col("ha"), col("hb"), lit(NumHashes)).as("sig"))
@@ -255,7 +250,6 @@ object Dedup {
     * minimizations over the corpus. */
   /** (doc_id, lang, shs, ha, hb, n, sig) — the persisted index layout. */
   private def indexFrame(documents: DataFrame): DataFrame = {
-    graft.functions.TextHashExprs.register(documents.sparkSession)
     TextPrep.docShingles(documents)
       .withColumn("sig",
         call_function("minhash_sigs", col("ha"), col("hb"), lit(NumHashes)))
@@ -313,7 +307,6 @@ object Dedup {
   }
 
   private def pairsFrom(docs: DataFrame): DataFrame = {
-    graft.functions.TextHashExprs.register(docs.sparkSession)
     val cand = candidatesFrom(bandKeys(signaturesFrom(docs)))
     verifyPairs(cand, docs)
   }
@@ -358,7 +351,6 @@ object Dedup {
   def minhashLshPairsIncremental(spark: org.apache.spark.sql.SparkSession,
                                  indexPath: String,
                                  newDocs: DataFrame): DataFrame = {
-    graft.functions.TextHashExprs.register(spark)
     val newPrep = indexFrame(newDocs)
     val newBk = bandKeys(newPrep)
     // Cold start (no index yet): the index side is empty, so pair
@@ -483,7 +475,6 @@ object Dedup {
     * the shuffle — never a full shuffle-sort of the corpus). */
   def clusterRepresentatives(documents: DataFrame,
                              threshold: Double = ClusterThreshold): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(documents.sparkSession)
     val clusters = dupClusters(documents, threshold)
     val quality = TextStats.textStatsUnordered(documents)
       .select("doc_id", "quality_score")
@@ -547,7 +538,6 @@ object Dedup {
     * and a baked-in presentation sort would range-shuffle the whole
     * fingerprint table into the cache for nothing. */
   private def winnowFingerprintsUnordered(documents: DataFrame): DataFrame = {
-    graft.functions.TextHashExprs.register(documents.sparkSession)
     documents
       .select(col("doc_id"),
         explode(call_function("winnow_fps", col("text"),
@@ -677,7 +667,6 @@ object Dedup {
     * signatures). Counting is a hash aggregate on the bigram; ranking
     * sorts the surviving VOCABULARY-sized table, never the corpus. */
   def bigramCounts(documents: DataFrame, topN: Int = BigramTopN): DataFrame = {
-    graft.functions.TextHashExprs.register(documents.sparkSession)
     val counts = documents
       .select(col("doc_id"),
         explode(call_function("shingle_hashes", col("text"), lit(2))
@@ -772,7 +761,6 @@ object Dedup {
     * portability games). simhash64 is a native row-local expression:
     * one md5 per word occurrence, no explode, no shuffle. */
   private def fingerprints(documents: DataFrame): DataFrame = {
-    graft.functions.TextHashExprs.register(documents.sparkSession)
     val fp = call_function("simhash64", col("text"))
     documents.select(
       col("doc_id"), col("lang"),
@@ -1015,7 +1003,6 @@ object Dedup {
   val DupSpanK: Int = TextPrep.ShingleWords
 
   def dupSpanStats(documents: DataFrame): DataFrame = {
-    graft.functions.TextHashExprs.register(documents.sparkSession)
     // every k-gram occurrence with its 0-based position, NOT distinct
     // (position and multiplicity are the point here) — a native
     // codegen'd expression (one md5 per gram, no interpreted lambda,
@@ -1075,7 +1062,6 @@ object Dedup {
     * Every doc passes through, including sub-k-gram ones (nothing
     * removable). */
   def stripDupSpans(documents: DataFrame): DataFrame = {
-    graft.functions.TextHashExprs.register(documents.sparkSession)
     val k = DupSpanK
     val ws = TextPrep.wordsCol
     val wp = documents.select(col("doc_id"), posexplode(ws))
@@ -1230,7 +1216,6 @@ object Dedup {
     * key universe (shingle size, short-doc guard, distinct
     * semantics). Cached; identical plans share one cache entry. */
   private def sourceShingleFrame(documents: DataFrame): DataFrame = {
-    graft.functions.TextHashExprs.register(documents.sparkSession)
     // round 14: the per-doc shingle-hash pass is the heavy stage here
     // (one md5 per distinct shingle) — fan the unsplittable scan
     graft.util.Scans.fanOutBy(documents, "doc_id")

@@ -64,7 +64,6 @@ object Similarity {
     * ranks them NULLS LAST, so the same corpus would emit different
     * top-k rows. Filtering at the root pins one semantic everywhere. */
   def prepared(embeddings: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(embeddings.sparkSession)
     embeddings
       .filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -95,7 +94,6 @@ object Similarity {
     * partition reach the shuffle — the only shape that survives a
     * 100 TB corpus. */
   def bruteForceTopK(embeddings: DataFrame, k: Int): DataFrame = {
-    graft.functions.TopKByScore.register(embeddings.sparkSession)
     val n = prepared(requireBaselineSized(embeddings, "bruteForceTopK"))
     n.as("a").join(n.as("b"), col("a.vec_id") =!= col("b.vec_id"))
       .select(
@@ -253,7 +251,6 @@ object Similarity {
   private def bucketFrame(n: DataFrame,
                           numPlanes: Int = NumPlanes,
                           cache: Boolean = true): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(n.sparkSession)
     // fan the vector frame out before hashing (round 13): the callers'
     // cached `n` inherits the single-row-group scan's ONE partition,
     // so the hash pass AND — far worse — the downstream banded
@@ -527,7 +524,6 @@ object Similarity {
                           threshold: Double,
                           numPlanes: Int = AdaptiveWidth,
                           multiProbe: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(spark)
     // no .cache() anywhere in the per-trigger path: the caller persists
     // the raw batch; everything here is cheap projection over it
     val nb = prepared(batch)
@@ -591,7 +587,6 @@ object Similarity {
     * ingest-once/query-many split a production corpus runs. */
   def lshNearDupPairsFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                                threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(spark)
     requireUniformWidth(spark, path) // fail-loud before candidates (ADVICE r9)
     val b = spark.read.parquet(s"$path/buckets")
     val n = spark.read.parquet(s"$path/vectors")
@@ -622,7 +617,6 @@ object Similarity {
   def multiProbeLshPairsFromIndex(spark: org.apache.spark.sql.SparkSession,
                                   path: String,
                                   threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(spark)
     val np = requireUniformWidth(spark, path)
     val b = spark.read.parquet(s"$path/buckets")
     val n = spark.read.parquet(s"$path/vectors")
@@ -656,8 +650,6 @@ object Similarity {
   def lshNeighborsFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                             vecId: Long, k: Int,
                             multiProbe: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(spark)
-    graft.functions.TopKByScore.register(spark)
     val b = spark.read.parquet(s"$path/buckets")
     val n = spark.read.parquet(s"$path/vectors")
     val qbExact = b.filter(col("vec_id") === vecId)
@@ -707,7 +699,6 @@ object Similarity {
     * by `q_lsh_recall`. */
   def lshTopKNeighbors(embeddings: DataFrame, k: Int,
                        numPlanes: Int = AdaptiveWidth): DataFrame = {
-    graft.functions.TopKByScore.register(embeddings.sparkSession)
     val n = prepared(embeddings).cache() // same multi-use shape as lshNearDupPairs
     val b = bucketFrame(n, resolveWidth(n, numPlanes))
     // dedup/join/score each UNORDERED pair once (cosine is symmetric),
@@ -817,7 +808,6 @@ object Similarity {
     * implies nrm > 0 (the prefix sum is a subset of the full sum),
     * so no separate full-norm guard is needed. */
   def mrlRecall(embeddings: DataFrame): DataFrame = {
-    graft.functions.TopKByScore.register(embeddings.sparkSession)
     val n = prepared(embeddings)
       .withColumn("vp", slice(col("v"), 1, MrlPrefixDim))
       .withColumn("nrmp", sqrt(call_function("dot_d", col("vp"), col("vp"))))
@@ -1154,7 +1144,6 @@ object Similarity {
     * use. */
   def semanticDecontam(documents: DataFrame, embeddings: DataFrame,
                        threshold: Double = 0.3): DataFrame = {
-    graft.functions.TopKByScore.register(embeddings.sparkSession)
     // width basis = non-null embedding count (the twin's COUNT(*) FROM
     // n): counted on the RAW column so the scan is a pruned columnar
     // count, not a second prepared() pass computing norms for nothing
@@ -1242,7 +1231,6 @@ object Similarity {
     * oracle recomputes the identical md5-derived signs and the same
     * left-fold accumulation order, so doubles match bit-for-bit. */
   def jlProject(embeddings: DataFrame, k: Int = JlK): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(embeddings.sparkSession)
     val n = embeddings.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
     val projected = (1 to k).map { j =>
@@ -1403,7 +1391,6 @@ object Similarity {
   }
 
   def pqCodes(embeddings: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(embeddings.sparkSession)
     // cache lifecycle: same as ivfTopK/minedPairs — shared between the
     // eager codebook fits and the RETURNED lazy encode plan, which
     // references it; released by the caller's action + clearCache()
@@ -1445,7 +1432,6 @@ object Similarity {
     * Scores are exact IEEE sums of oracle-identical terms, so the
     * result hash-matches bit-for-bit. */
   def adcTopK(embeddings: DataFrame, k: Int = AdcK): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(embeddings.sparkSession)
     // cache lifecycle: kept alive for the returned plan, like pqCodes
     val n0 = prepared(embeddings).cache()
     val n = fitCoalesce(n0, n0.count()) // see pqCodes — same rationale
@@ -1682,7 +1668,6 @@ object Similarity {
     * Returns index-layout rows (vec_id, centroid_id, v, nrm). */
   def assignToFixedCentroids(embeddings: DataFrame,
                              centroids: DataFrame): DataFrame = {
-    graft.functions.TopKByScore.register(embeddings.sparkSession)
     val n = prepared(embeddings)
     scoreAgainst(n, centroids)
       .groupBy("vec_id")
@@ -1885,7 +1870,6 @@ object Similarity {
     * the returned lazy plan; released by the caller's clearCache()
     * (Bench/Verify). */
   private def neighborLabelVotes(embeddings: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(embeddings.sparkSession)
     val n = prepared(embeddings).cache()
     val labels = embeddings.select(col("vec_id"), col("label"))
     val assign = assignToCentroids(n)
@@ -2127,7 +2111,6 @@ object Similarity {
 
   private def minedPairs(embeddings: DataFrame, k: Int,
                          sameLabel: Boolean, partnerCol: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(embeddings.sparkSession)
     // same cache lifecycle as ivfTopK/semanticDedup: shared between the
     // eager fit and the returned lazy plan; released by the caller
     val n = prepared(embeddings).cache()
@@ -2220,7 +2203,6 @@ object Similarity {
     * map partition off each scan. Declared in PlanAudit.allowlist as
     * an evaluation harness. */
   def ivfRecall(embeddings: DataFrame, k: Int = RecallK): DataFrame = {
-    graft.functions.TopKByScore.register(embeddings.sparkSession)
     val n = prepared(embeddings).cache()
     val q = n.filter(pmod(col("vec_id"), lit(RecallSampleMod)) === 0)
       .orderBy("vec_id").limit(RecallMaxQueries)

@@ -54,7 +54,6 @@ object TextPrep {
     * fan-out did (see Scans' doc).
     */
   def docShingles(documents: DataFrame): DataFrame = {
-    graft.functions.TextHashExprs.register(documents.sparkSession)
     // round 14: hash-by-doc_id instead of round-robin — the per-doc
     // size aggregate and every doc-keyed join downstream reuse the
     // exchange (q_minhash_est 3.6 -> ~1.0 s rode exactly this)

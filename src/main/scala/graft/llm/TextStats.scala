@@ -92,7 +92,6 @@ object TextStats {
     * shingle expression; the top-word share is a per-row fold over the
     * word array (docs are bounded; no shuffle, no explode). */
   def repetitionStats(documents: DataFrame): DataFrame = {
-    graft.functions.TextHashExprs.register(documents.sparkSession)
     documents
       .select(col("doc_id"),
         // the ONE shared tokenizer — inline split would silently
@@ -806,7 +805,6 @@ object TextStats {
     * exact counts and literal TRUEs, so a hash match means the sketch
     * honored its bounds on this corpus. */
   def cmsTopWords(documents: DataFrame, k: Int = CmsTopK): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(documents.sparkSession)
     val words = documents.select(explode(TextPrep.wordsCol).as("word"))
     // sketch + corpus total in ONE aggregate: as separate .agg() calls
     // they are different subplans ReuseExchange cannot merge, so each
@@ -851,7 +849,6 @@ object TextStats {
     * the exact top-k and literal TRUEs, so a hash match proves MG
     * honored its contract on this corpus. */
   def heavyHitters(documents: DataFrame, k: Int = CmsTopK): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(documents.sparkSession)
     val mgK = graft.functions.MisraGries.K
     val words = documents.select(explode(TextPrep.wordsCol).as("word"))
     // summary + corpus total in ONE aggregate (same one-scan reasoning
@@ -903,7 +900,6 @@ object TextStats {
     * corpus-sized shuffle; its key space is the bigram vocabulary and
     * hot bigrams are bounded by per-doc distinctness + AQE. */
   def bigramSurprisal(documents: DataFrame): DataFrame = {
-    graft.functions.TextHashExprs.register(documents.sparkSession)
     val b = documents.select(col("doc_id"),
       explode(call_function("shingle_hashes", col("text"), lit(2))
         .getField("shs")).as("bigram"))
@@ -993,7 +989,6 @@ object TextStats {
   def charTrigramLid(documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // per-doc DISTINCT trigrams, deduplicated inside the row
-    graft.functions.TextHashExprs.register(documents.sparkSession)
     val dt = documents
       .filter(length(lower(col("text"))) >= 3)
       .select(col("doc_id"), col("lang"),

@@ -335,7 +335,6 @@ object Windows {
     * the fact table. Tie order (score desc, id asc) matches the
     * oracle's row_number exactly. */
   def statusTopOrders(orders: DataFrame, k: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(orders.sparkSession)
     orders.groupBy("o_orderstatus")
       .agg(call_function("top_k_by",
         col("o_totalprice"), col("o_orderkey"), lit(k)).as("top"))

@@ -310,7 +310,6 @@ object Sources {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         import spark.implicits._
-        graft.functions.GraftFunctions.registerAll(spark)
         batch.persist()
         try {
           // acquire INSIDE the try (ADVICE r11): a lease-conflict
@@ -724,7 +723,6 @@ object Sources {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.functions.GraftFunctions.registerAll(batch.sparkSession)
         val sk = batch
           .select(explode(graft.llm.TextPrep.wordsCol).as("word"))
           .agg(call_function("cms_build", col("word")).as("sk"))

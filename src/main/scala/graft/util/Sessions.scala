@@ -13,7 +13,10 @@ import org.apache.spark.sql.SparkSession
   * builder makes them identical by construction; a future
   * engine-level setting lands here once and reaches every surface.
   *
-  * Config notes (all scale-adaptive, none a local[32] constant):
+  * Config notes (all scale-adaptive, none a local[32] constant). The
+  * four marked (required) are [[required]]: the settings every graft
+  * session needs to give correct results, which the test session
+  * applies too.
   *  - `spark.sql.shuffle.partitions` = the session core count from
   *    `$SPARK_GRAFT_CPUS` — the driver contract; AQE re-sizes from
   *    there by advisory bytes.
@@ -29,7 +32,14 @@ import org.apache.spark.sql.SparkSession
   *    class cache; any long-lived SQL service keeps generated classes
   *    hot across repeated query shapes. Bounded memory, no result
   *    effect.
-  *  - `session.timeZone=UTC`: the oracle comparison timezone
+  *  - `spark.sql.extensions` = [[graft.functions.GraftExtensions]]
+  *    (required): the one install path of graft's SQL functions. Spark
+  *    applies it to every session state it builds, so the functions
+  *    reach `newSession()`s and each streaming query's cloned session
+  *    with no call from an operator. The key is static: a session built
+  *    anywhere else needs this one conf line, or every query using a
+  *    graft function fails at analysis with an unresolved routine.
+  *  - `session.timeZone=UTC` (required): the oracle comparison timezone
   *    (previously Verify/Smoke-only; timestamps in this suite are
   *    epoch-derived, so the setting is result-neutral for Bench but
   *    the engines should not differ even cosmetically).
@@ -46,12 +56,12 @@ import org.apache.spark.sql.SparkSession
   *    they split across cores while the tiny iterative shuffles still
   *    coalesce to one. 8 MB was measured as a net loss. A cluster-scale
   *    corpus wants the usual 100 MB–1 GB.
-  *  - `legacy.parquet.nanosAsLong=true`: a TIMESTAMP(NANOS) parquet
-  *    column reads as long instead of failing the scan, and
+  *  - `legacy.parquet.nanosAsLong=true` (required): a TIMESTAMP(NANOS)
+  *    parquet column reads as long instead of failing the scan, and
   *    [[graft.Tables]] converts it to µs (the testdata has shipped
   *    both NANOS and MICROS). Set once here so the loaders never
   *    write the session's config; it has no effect on MICROS data.
-  *  - [[localFs]] (`fs.file.impl`, `fs.AbstractFileSystem.file.impl`):
+  *  - `fs.file.impl`, `fs.AbstractFileSystem.file.impl` (required):
   *    the `file` scheme's FileSystem and FileContext are [[LocalFs]],
   *    which sets permissions and checks links in-process. Stock Hadoop
   *    without its native library forks `chmod` per file create and per
@@ -70,9 +80,12 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
-  /** Hadoop keys that install [[LocalFs]] for the `file` scheme; every
-    * session (and the test session) applies them. */
-  val localFs: Map[String, String] = Map(
+  /** The settings every graft session needs to give correct results;
+    * [[build]] and the test session both apply them. */
+  val required: Map[String, String] = Map(
+    "spark.sql.extensions" -> classOf[graft.functions.GraftExtensions].getName,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.hadoop.fs.file.impl" -> classOf[LocalFs.FileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Fs].getName)
 
@@ -84,21 +97,17 @@ object Sessions {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", cpusDefault)
     val localDir = new java.io.File(s"target/spark-local-$tool").getAbsolutePath
     new java.io.File(localDir).mkdirs()
-    val spark = SparkSession.builder()
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", localDir)
       .config("spark.cleaner.referenceTracking.blocking", "false")
-      .config(localFs)
+      .config(required)
       .getOrCreate()
-    graft.functions.GraftFunctions.registerAll(spark)
-    spark
   }
 
   /** Run `body` — an ITERATIVE driver loop (label propagation, BPE

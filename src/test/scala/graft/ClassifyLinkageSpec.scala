@@ -808,7 +808,6 @@ class ClassifyLinkageSpec extends SparkSpec {
   }
 
   test("char_grams kernel matches the interpreted transform chain") {
-    graft.functions.TextHashExprs.register(spark)
     val docs = Tables.documents(spark, sf()).limit(50)
       .union(Seq((9001L, "ab", "en", "x", 2L), (9002L, "AbCd", "en", "x", 4L))
         .toDF("doc_id", "text", "lang", "source", "n_chars"))

@@ -430,7 +430,6 @@ class LlmSpec extends SparkSpec {
   }
 
   test("native text-hash expressions: null, empty, and short inputs") {
-    graft.functions.GraftFunctions.registerAll(spark)
     // null text propagates null through every expression
     val nulls = spark.sql(
       """SELECT shingle_hashes(CAST(NULL AS STRING), 3) AS sh,
@@ -455,7 +454,6 @@ class LlmSpec extends SparkSpec {
   }
 
   test("native text-hash expressions reject malformed arguments loudly") {
-    graft.functions.GraftFunctions.registerAll(spark)
     // mismatched ha/hb would index off the shorter array — silent
     // garbage on UnsafeArrayData — so the kernel must throw instead
     val e1 = intercept[Exception] {
@@ -473,7 +471,6 @@ class LlmSpec extends SparkSpec {
   }
 
   test("char_grams counts code points, not UTF-16 units (non-BMP parity)") {
-    graft.functions.GraftFunctions.registerAll(spark)
     // U+1D54F is a surrogate PAIR in UTF-16 but ONE character to
     // DuckDB's substr — the kernel must gram by code point or the
     // trigram features diverge from the oracle outside the BMP
@@ -482,8 +479,19 @@ class LlmSpec extends SparkSpec {
     assert(grams === Seq("𝕏a", "ab"))
   }
 
-  test("registerAll exposes every custom function to plain SQL text") {
-    graft.functions.GraftFunctions.registerAll(spark)
+  test("session extension exposes every custom function to SQL text, new sessions too") {
+    // no registration call: the test session names GraftExtensions in
+    // spark.sql.extensions, as util.Sessions.build does, and Spark
+    // applies it to every session state it builds
+    assert(spark.sparkContext.getConf.get("spark.sql.extensions") ===
+      classOf[graft.functions.GraftExtensions].getName)
+    Seq(spark, spark.newSession()).foreach(exposesEveryFunction)
+  }
+
+  private def exposesEveryFunction(spark: org.apache.spark.sql.SparkSession): Unit = {
+    graft.functions.GraftFunctions.all.foreach { case (n, _) =>
+      assert(spark.catalog.functionExists(n), n)
+    }
     assert(spark.sql("SELECT dot_d(array(1.0D,2.0D), array(3.0D,4.0D))")
       .collect().head.getDouble(0) === 11.0)
     assert(spark.sql("SELECT simhash64('hello world')").collect().head.getLong(0) ===
@@ -521,20 +529,18 @@ class LlmSpec extends SparkSpec {
     assert(!bloomHit("zzz"))  // tiny filter: non-member misses
   }
 
-  test("registerAll replaces a user's same-named pre-registered function") {
-    // fresh session: own functionRegistry, not yet in the guard map
+  test("a user's same-named function on a new session shadows graft's only there") {
     val fresh = spark.newSession()
-    fresh.udf.register("dot_d", (a: Seq[Double], b: Seq[Double]) => -1.0)
-    assert(fresh.sql("SELECT dot_d(array(1.0D), array(1.0D))")
-      .collect().head.getDouble(0) === -1.0) // user's udf is live
-    graft.functions.GraftFunctions.registerAll(fresh)
-    // graft's builder wins: idempotency is keyed on the SESSION, not on
-    // name existence, so the first registerAll always installs graft's
+    // a new session starts with graft's builder, from the extension
     assert(fresh.sql("SELECT dot_d(array(1.0D,2.0D), array(3.0D,4.0D))")
       .collect().head.getDouble(0) === 11.0)
-    // and the parent session's registration is untouched
-    graft.functions.GraftFunctions.registerAll(spark)
+    fresh.udf.register("dot_d", (a: Seq[Double], b: Seq[Double]) => -1.0)
+    assert(fresh.sql("SELECT dot_d(array(1.0D), array(1.0D))")
+      .collect().head.getDouble(0) === -1.0) // user's udf is live there
+    // the parent and any other new session keep graft's
     assert(spark.sql("SELECT dot_d(array(2.0D), array(2.0D))")
+      .collect().head.getDouble(0) === 4.0)
+    assert(spark.newSession().sql("SELECT dot_d(array(2.0D), array(2.0D))")
       .collect().head.getDouble(0) === 4.0)
   }
 
@@ -1240,7 +1246,6 @@ class LlmSpec extends SparkSpec {
     assert(u("https://a.b.c:notaport/x")._2 == "a.b.c:notaport")
     assert(u("") == (("", "", "", "", "", 0, 0, false)))
     // DF path: the codegen'd expression agrees with the kernel
-    graft.functions.GraftFunctions.registerAll(spark)
     val df = Seq("https://u@h.d.com:81/a/b/c?x=1").toDF("s")
       .select(call_function("url_parts", col("s")).as("u"))
       .select("u.scheme", "u.host", "u.domain", "u.tld", "u.path", "u.port",
@@ -1497,7 +1502,6 @@ class LlmSpec extends SparkSpec {
     // whitespace runs collapse; leading/trailing trimmed
     assert(x("<p>  a\t\n b  </p>") == (("a b", 0, 3, 0, 0)))
     // DF-level: the codegen'd expression path agrees with the kernel
-    graft.functions.GraftFunctions.registerAll(spark)
     val df = Seq("<nav>skip</nav><p>hello <a>w</a></p>").toDF("h")
       .select(call_function("html_extract", col("h")).as("x"))
       .select("x.main_text", "x.n_links", "x.text_chars", "x.link_chars",
@@ -2167,7 +2171,6 @@ class TopKAggSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
 
   test("top_k_by: bounded heap matches window ranking incl. ties, across partitions") {
-    graft.functions.TopKByScore.register(spark)
     val rows = Seq(
       (1L, 10L, 0.9), (1L, 11L, 0.8), (1L, 12L, 0.9), (1L, 13L, 0.1), (1L, 14L, 0.8),
       (2L, 20L, 0.5), (2L, 21L, 0.5), (2L, 22L, 0.5), (2L, 23L, 0.4))
@@ -2184,7 +2187,6 @@ class TopKAggSpec extends SparkSpec {
   }
 
   test("top_k_by: k larger than group returns whole group sorted") {
-    graft.functions.TopKByScore.register(spark)
     val df = Seq((1L, 5L, 0.3), (1L, 6L, 0.7)).toDF("q", "id", "score")
     val top = df.groupBy("q")
       .agg(call_function("top_k_by", col("score"), col("id"), lit(10)).as("top"))

@@ -42,7 +42,6 @@ class LshKernelSpec extends SparkSpec {
   }
 
   test("fused lsh_bucket_codes matches the unfused when/dot_d formulation") {
-    graft.functions.GraftFunctions.registerAll(spark)
     import spark.implicits._
     for (np <- Seq(6, llm.Similarity.MaxTwinPlanes)) {
       val df = vectors.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }
@@ -72,7 +71,6 @@ class LshKernelSpec extends SparkSpec {
     // surprised: the fused kernel is null-intolerant (null in → null
     // out), and posexplode of the null array emits NO rows, i.e. a
     // NULL vector simply does not enter the LSH index.
-    graft.functions.GraftFunctions.registerAll(spark)
     import spark.implicits._
     val df = Seq((1L, Some(Seq.fill(LshPlanes.Dim)(1.0))), (2L, None))
       .toDF("vec_id", "v")

@@ -16,12 +16,10 @@ object SparkSpec {
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // as in util.Sessions.build: TIMESTAMP(NANOS) parquet reads as long
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // as in util.Sessions.build: the fork-free local filesystem
-      .config(graft.util.Sessions.localFs)
+      // as in util.Sessions.build: graft's functions, UTC, NANOS
+      // parquet as long, the fork-free local filesystem
+      .config(graft.util.Sessions.required)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // The iterative CC/PageRank loops localCheckpoint() every round and

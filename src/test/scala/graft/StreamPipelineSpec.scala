@@ -115,6 +115,28 @@ class StreamPipelineSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("retrySplit routes valid, retryable under the bound, and dead-letter") {
+    def ids(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.select("transaction_id").collect().map(_.getString(0)).toSet
+    val noCount = Seq(
+      ("T1", "ACC1", 10.0),          // valid
+      ("T2", null: String, 5.0),     // unknown account: retryable
+      ("T3", "ACC1", -1.0),          // bad amount never heals
+      ("T4", null: String, -1.0))    // bad amount, no account: not retryable
+      .toDF("transaction_id", "account_id", "amount")
+      .withColumn("transaction_type", lit("deposit"))
+    val (v, r, d) = StreamPipeline.retrySplit(noCount, maxRetries = 2)
+    assert(ids(v) === Set("T1") && ids(r) === Set("T2") && ids(d) === Set("T3", "T4"))
+    assert(r.select("retry_count").as[Int].collect().toSeq === Seq(0)) // absent → 0
+    // a re-ingested record parks while retry_count < maxRetries, then dies
+    val counted = Seq(("T5", 1), ("T6", 2)).toDF("transaction_id", "retry_count")
+      .withColumn("account_id", lit(null).cast("string"))
+      .withColumn("amount", lit(5.0))
+      .withColumn("transaction_type", lit("deposit"))
+    val (v2, r2, d2) = StreamPipeline.retrySplit(counted, maxRetries = 2)
+    assert(ids(v2).isEmpty && ids(r2) === Set("T5") && ids(d2) === Set("T6"))
+  }
+
   test("S8 retry loop: retryable records re-enter and converge within maxRetries") {
     implicit val sqlCtx = spark.sqlContext
     val tmp = Files.createTempDirectory("graft_retry").toString
@@ -1421,7 +1443,6 @@ class StreamPipelineSpec extends SparkSpec {
 
   test("streaming CMS maintenance: batch-sketch sum equals one-shot build") {
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.registerAll(spark)
     val dir = Files.createTempDirectory("cms_out").toString
     val ckpt = Files.createTempDirectory("cms_ckpt").toString
     val mem = MemoryStream[(Long, String)]
