@@ -13,10 +13,13 @@ local gate must distinguish everything a hash distinguishes —
 NaN == NaN is accepted (one canonical 'NaN' token), matching a
 serialization-based hash.
 
+Each compared query's line ends with the seconds DuckDB took to run its
+oracle SQL, and the ten slowest are listed before the final count.
+
 Usage: python3 scripts/oracle_check.py <sfDir> <verifyOutDir>
        python3 scripts/oracle_check.py --selftest
 """
-import sys, json, glob, math, decimal
+import sys, json, glob, math, decimal, time
 import duckdb
 
 TABLES = ["region","nation","customer","supplier","part","orders",
@@ -111,22 +114,30 @@ def main():
 
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     fail = 0
+    secs = {}
     for name, sql in sorted(oracle.items()):
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             print(f"FAIL {name}: no spark output"); fail += 1; continue
+        t0 = time.perf_counter()
         try:
             res = con.sql(sql)
             ora_cols, ora_rows = list(res.columns), res.fetchall()
         except Exception as e:
             print(f"FAIL {name}: oracle error {e}"); fail += 1; continue
+        finally:
+            secs[name] = time.perf_counter() - t0
         got = con.sql(f"SELECT * FROM '{files[0]}'")
         got_cols, got_rows = list(got.columns), got.fetchall()
         ok, msg = compare(ora_cols, ora_rows, got_cols, got_rows)
         if ok:
-            print(f"PASS {name} ({len(ora_rows)} rows x {len(ora_cols)} cols)")
+            print(f"PASS {name} ({len(ora_rows)} rows x {len(ora_cols)} cols)"
+                  f" [{secs[name]:.2f}s]")
         else:
-            print(f"FAIL {name}: {msg}"); fail += 1
+            print(f"FAIL {name}: {msg} [{secs[name]:.2f}s]"); fail += 1
+    print("\nslowest oracle queries (DuckDB seconds):")
+    for name in sorted(secs, key=secs.get, reverse=True)[:10]:
+        print(f"  {secs[name]:8.2f}  {name}")
     print(f"\n{len(oracle)-fail}/{len(oracle)} passed")
     sys.exit(1 if fail else 0)
 

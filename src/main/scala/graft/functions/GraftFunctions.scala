@@ -13,6 +13,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * streaming query's `foreachBatch` runs on, with no call from an
   * operator. A session built without that conf line has none of them,
   * and a query using one fails at analysis with an unresolved routine.
+  * The extension also installs one optimizer rule,
+  * [[BatchTimestampByReference]], which keeps a streamed plan's generated
+  * code the same on every trigger; without it results are the same, but
+  * each trigger compiles its classes again.
   */
 object GraftFunctions {
 
@@ -54,8 +58,11 @@ object GraftFunctions {
     }
 }
 
-/** `--conf spark.sql.extensions=graft.functions.GraftExtensions` */
+/** `--conf spark.sql.extensions=graft.functions.GraftExtensions`: graft's
+  * functions plus the optimizer rule [[BatchTimestampByReference]]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.inject(ext)
+    ext.injectOptimizerRule(_ => BatchTimestampByReference)
+  }
 }

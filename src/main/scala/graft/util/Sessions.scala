@@ -39,6 +39,12 @@ import org.apache.spark.sql.SparkSession
   *    with no call from an operator. The key is static: a session built
   *    anywhere else needs this one conf line, or every query using a
   *    graft function fails at analysis with an unresolved routine.
+  *    The extension also installs the optimizer rule
+  *    [[graft.functions.BatchTimestampByReference]]: a streamed
+  *    `current_timestamp()` reaches generated code by reference, so a
+  *    trigger reuses the classes the first trigger compiled. Without it
+  *    the timestamps are the same, but every trigger compiles again
+  *    (2 classes per `dualSinkQuery` trigger).
   *  - `session.timeZone=UTC` (required): the oracle comparison timezone
   *    (previously Verify/Smoke-only; timestamps in this suite are
   *    epoch-derived, so the setting is result-neutral for Bench but

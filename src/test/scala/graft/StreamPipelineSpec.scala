@@ -1669,4 +1669,95 @@ class StreamPipelineSpec extends SparkSpec {
       assert(atProgress.get() === 1, "jobs in the dual sink's data trigger")
     } finally { q.stop(); spark.sparkContext.removeSparkListener(listener) }
   }
+
+  test("BatchTimestampByReference: batch timestamps become BatchConstant references") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, CurrentBatchTimestamp, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.optimizer.ConstantFolding
+    import org.apache.spark.sql.catalyst.plans.logical.{OneRowRelation, Project}
+    import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
+    import graft.functions.{BatchConstant, BatchTimestampByReference}
+    val stamps = Seq(TimestampType, TimestampNTZType, DateType)
+      .map(CurrentBatchTimestamp(1700000123456L, _, Some("America/New_York")))
+    val plan = Project(stamps.zipWithIndex.map { case (t, i) => Alias(t, s"t$i")() },
+      OneRowRelation())
+    // ConstantFolding runs after the rule in the optimizer: it must not
+    // turn the constants back into literals
+    val rewritten = ConstantFolding(BatchTimestampByReference(plan))
+    val consts = rewritten.expressions.flatMap(_.collect { case c: BatchConstant => c })
+    assert(rewritten.expressions.forall(_.find(e =>
+      e.isInstanceOf[CurrentBatchTimestamp] || e.isInstanceOf[Literal]).isEmpty), rewritten)
+    assert(consts.map(c => Literal(c.value, c.dataType)) === stamps.map(_.toLiteral))
+    // generated code reads the value, it does not inline it
+    def javaSource(c: BatchConstant): String =
+      c.genCode(new org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext)
+        .code.toString
+    consts.foreach { c =>
+      assert(javaSource(c) === javaSource(c.copy(value = 0)), c)
+      val row = GenerateUnsafeProjection.generate(Seq(c)).apply(null)
+      assert(row.get(0, c.dataType) === c.value, c)
+    }
+    // a batch plan's current_timestamp() is a literal before the rule runs
+    val batch = spark.range(1).select(current_timestamp()).queryExecution.optimizedPlan
+    assert(batch.expressions.forall(_.find(_.isInstanceOf[BatchConstant]).isEmpty), batch)
+  }
+
+  /** Move a JSON-lines file of `n` transactions (one valid, the rest
+    * invalid) into `dir` whole, so a running file source never lists a
+    * partial file. */
+  private def dropTxnFile(dir: String, i: Int, n: Int = 2): Unit = {
+    val tmp = Files.createTempFile("graft_txn", ".json")
+    Files.write(tmp, (txnJson(s"T$i", "ACC1", "deposit", 10.0 + i, "2024-01-01T00:00:00") +:
+      (1 until n).map(k => txnJson(s"X$i-$k", "ACC1", "deposit", -5.0, "2024-01-01T00:00:00")))
+      .mkString("\n").getBytes("UTF-8"))
+    Files.move(tmp, java.nio.file.Paths.get(dir, f"part-$i%03d.json"))
+  }
+
+  private def oneFilePerTrigger(dir: String) =
+    StreamPipeline.typed(spark.readStream.schema(Schemas.transactionSchema)
+      .option("maxFilesPerTrigger", 1).json(dir))
+
+  test("S8 dual sink: no codegen compile after the first trigger") {
+    val tmp = Files.createTempDirectory("graft_dual_codegen").toString
+    val in = Files.createDirectories(java.nio.file.Paths.get(tmp, "in")).toString
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    dropTxnFile(in, 0)
+    val q = Sources.dualSinkQuery(oneFilePerTrigger(in), s"$tmp/main", s"$tmp/dead", s"$tmp/ckpt")
+    try {
+      q.processAllAvailable()
+      val afterFirst = compiles.getCount
+      (1 to 6).foreach(dropTxnFile(in, _))
+      q.processAllAvailable()
+      assert(compiles.getCount - afterFirst === 0L,
+        "classes compiled by the 6 triggers after the first")
+    } finally q.stop()
+    assert(sinkRows(s"$tmp/main").map(_._2) === (0L to 6L).toSet, "one file per trigger")
+  }
+
+  test("S8 dual sink: each batch's rows carry that batch's timestamp, across a restart") {
+    val tmp = Files.createTempDirectory("graft_dual_stamp").toString
+    val in = Files.createDirectories(java.nio.file.Paths.get(tmp, "in")).toString
+    // two runs on one checkpoint: batches 0-2, then 3-5 after the restart
+    Seq(0 to 2, 3 to 5).foreach { files =>
+      files.foreach(dropTxnFile(in, _, n = 3))
+      val q = Sources.dualSinkQuery(oneFilePerTrigger(in),
+        s"$tmp/main", s"$tmp/dead", s"$tmp/ckpt")
+      try q.processAllAvailable() finally q.stop()
+    }
+    val stamps = Seq("main", "dead")
+      .map(d => spark.read.parquet(s"$tmp/$d")
+        .select(col("micro_batch_id").cast("long"), unix_micros(col("ingestion_time"))))
+      .reduce(_ union _)
+      .distinct().as[(Long, Long)].collect().groupBy(_._1)
+      .map { case (b, rows) => b -> rows.map(_._2).toSeq }
+    assert(stamps.keySet === (0L to 5L).toSet)
+    val batchTimestampMs = "\"batchTimestampMs\":(\\d+)".r
+    stamps.toSeq.sortBy(_._1).foreach { case (b, us) =>
+      val logged = batchTimestampMs.findFirstMatchIn(
+        new String(Files.readAllBytes(java.nio.file.Paths.get(tmp, "ckpt", "offsets", b.toString)),
+          "UTF-8")).get.group(1).toLong
+      assert(us === Seq(logged * 1000L), s"batch $b: ingestion_time µs vs offsets log")
+    }
+    assert(stamps.values.flatten.toSet.size === 6, s"batches share a timestamp: $stamps")
+  }
 }
