@@ -266,10 +266,10 @@ object Dedup {
     // lease — a bulk build is the destructive provisioning step by
     // definition, not a concurrent-maintenance one, so protection
     // during it is not claimed.
-    BatchState.acquireLease(documents.sparkSession, path, "build")
-    indexFrame(documents).withColumn(BatchState.PartitionCol, lit(-1L))
-      .write.mode("overwrite").partitionBy(BatchState.PartitionCol).parquet(path)
-    BatchState.releaseLease(documents.sparkSession, path)
+    BatchState.underLease(documents.sparkSession, path, "build") {
+      indexFrame(documents).withColumn(BatchState.PartitionCol, lit(-1L))
+        .write.mode("overwrite").partitionBy(BatchState.PartitionCol).parquet(path)
+    }
   }
 
   /** Idempotent per-batch index append through
@@ -280,11 +280,10 @@ object Dedup {
     * [[BatchState.compactState]] fails loudly, a crash-replay of the
     * same batch reclaims its own lease. */
   def appendShingleIndexForBatch(documents: DataFrame, path: String,
-                                 batchId: Long): Unit = {
-    BatchState.acquireLease(documents.sparkSession, path, s"append:$batchId")
-    BatchState.writeBatchIdempotent(indexFrame(documents), path, batchId)
-    BatchState.releaseLease(documents.sparkSession, path)
-  }
+                                 batchId: Long): Unit =
+    BatchState.underLease(documents.sparkSession, path, s"append:$batchId") {
+      BatchState.writeBatchIdempotent(indexFrame(documents), path, batchId)
+    }
 
   /** The persisted shingle index, or None before the first batch has
     * created it — the streaming cold-start path. */

@@ -401,20 +401,20 @@ object Similarity {
                     numPlanes: Int = AdaptiveWidth): Int = {
     val n = prepared(embeddings).cache()
     val np = resolveWidth(n, numPlanes)
-    BatchState.acquireLease(embeddings.sparkSession, path, "build")
-    // micro_batch_id = -1 marks the bulk build; streaming appends land
-    // in micro_batch_id = N partitions beside it (the BatchState
-    // layout), with tbl as the secondary partition so per-table probes
-    // prune
-    val b = bucketFrame(n, np)
-    b.withColumn("np", lit(np)).withColumn(BatchState.PartitionCol, lit(-1L))
-      .write.mode("overwrite").partitionBy(BatchState.PartitionCol, "tbl")
-      .parquet(s"$path/buckets")
-    n.withColumn(BatchState.PartitionCol, lit(-1L))
-      .write.mode("overwrite").partitionBy(BatchState.PartitionCol)
-      .parquet(s"$path/vectors")
-    b.unpersist(); n.unpersist()
-    BatchState.releaseLease(embeddings.sparkSession, path)
+    BatchState.underLease(embeddings.sparkSession, path, "build") {
+      // micro_batch_id = -1 marks the bulk build; streaming appends land
+      // in micro_batch_id = N partitions beside it (the BatchState
+      // layout), with tbl as the secondary partition so per-table probes
+      // prune
+      val b = bucketFrame(n, np)
+      b.withColumn("np", lit(np)).withColumn(BatchState.PartitionCol, lit(-1L))
+        .write.mode("overwrite").partitionBy(BatchState.PartitionCol, "tbl")
+        .parquet(s"$path/buckets")
+      n.withColumn(BatchState.PartitionCol, lit(-1L))
+        .write.mode("overwrite").partitionBy(BatchState.PartitionCol)
+        .parquet(s"$path/vectors")
+      b.unpersist(); n.unpersist()
+    }
     np
   }
 
@@ -495,12 +495,12 @@ object Similarity {
       s"appending at width $np to an index stored at width $w would " +
         "mix signature widths (buckets never match across widths); " +
         "pass AdaptiveWidth or the stored width"))
-    BatchState.acquireLease(spark, path, s"append:$batchId")
-    BatchState.writeBatchIdempotent(
-      bucketFrame(n, np, cache = false).withColumn("np", lit(np)),
-      s"$path/buckets", batchId, Seq("tbl"))
-    BatchState.writeBatchIdempotent(n, s"$path/vectors", batchId)
-    BatchState.releaseLease(spark, path)
+    BatchState.underLease(spark, path, s"append:$batchId") {
+      BatchState.writeBatchIdempotent(
+        bucketFrame(n, np, cache = false).withColumn("np", lit(np)),
+        s"$path/buckets", batchId, Seq("tbl"))
+      BatchState.writeBatchIdempotent(n, s"$path/vectors", batchId)
+    }
   }
 
   /** Incremental near-dup pairs of a micro-BATCH against (index ∪

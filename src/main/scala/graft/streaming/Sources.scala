@@ -15,8 +15,50 @@ import graft.util.BatchState.writeBatchIdempotent
   * return fully-configured readers/writers (exercised to the point of
   * plan construction in tests), and file/memory sources drive the same
   * stages end-to-end for executable coverage.
+  *
+  * Every `foreachBatch` sink starts through [[eachBatch]], and its
+  * per-trigger body takes at most two wrappers, `leased` inside
+  * `cached`:
+  *  - [[cached]] persists the batch for the call and unpersists it in
+  *    a finally. Use it only where the body reads its batch more than
+  *    once; a body that reads it once would pay for a cache it never
+  *    hits.
+  *  - [[leased]] runs the body under the state root's `append:N`
+  *    write lease ([[BatchState.underLease]]): taken before any state
+  *    read or output write, released only if the body returns. A
+  *    crashed compactor (lease still naming `compact`) thus fails the
+  *    trigger before a half-swapped state could be read as empty, the
+  *    trigger's own replay reclaims its lease, and a refused trigger
+  *    still reaches `cached`'s unpersist.
   */
 object Sources {
+
+  /** One trigger's work: the micro-batch and its id. */
+  private type BatchWrite = (DataFrame, Long) => Unit
+
+  /** The append-mode, checkpointed `foreachBatch` query running
+    * `write` on every micro-batch of `df`. */
+  private def eachBatch(df: DataFrame, checkpoint: String)(
+      write: BatchWrite): StreamingQuery =
+    df.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(write)
+      .start()
+
+  /** `write` with its batch persisted for the call: one source scan
+    * feeds every read of the batch. */
+  private def cached(write: BatchWrite): BatchWrite = (batch, batchId) => {
+    batch.persist()
+    try write(batch, batchId) finally { batch.unpersist(); () }
+  }
+
+  /** `write` holding the `append:N` write lease of `statePath`. */
+  private def leased(statePath: String)(write: BatchWrite): BatchWrite =
+    (batch, batchId) =>
+      BatchState.underLease(batch.sparkSession, statePath, s"append:$batchId") {
+        write(batch, batchId)
+      }
 
   /** S1: Kafka streaming source — subscribe from earliest
     * (`transaction_processor.py:154-160`). */
@@ -80,42 +122,28 @@ object Sources {
     * every row twice. */
   def dualSinkQuery(parsed: DataFrame, mainDir: String, deadDir: String,
                     checkpoint: String): StreamingQuery =
-    parsed.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchIdempotent(StreamPipeline.validate(batch),
-          when(col("is_valid"), "main").otherwise("dead"),
-          Map("main" -> mainDir, "dead" -> deadDir), batchId, Nil)
-      }
-      .start()
+    eachBatch(parsed, checkpoint) { (batch, batchId) =>
+      writeBatchIdempotent(StreamPipeline.validate(batch),
+        when(col("is_valid"), "main").otherwise("dead"),
+        Map("main" -> mainDir, "dead" -> deadDir), batchId, Nil)
+    }
 
   /** S8+S9: one-pass triple routing via foreachBatch — valid records
     * to the main sink, invalid to dead-letter, alerts (failed/large,
     * a subset of the enriched stream like the reference's
-    * banking.alerts topic) to the alerts sink. One source scan feeds
-    * all three branches. */
+    * banking.alerts topic) to the alerts sink. One cached source scan
+    * feeds all three branches. The dead rows are not enriched, so they
+    * do not share main's schema and take their own write; all three
+    * are idempotent under crash-replay (see writeBatchIdempotent). */
   def routedSinkQuery(parsed: DataFrame, mainDir: String, deadDir: String,
                       alertDir: String, checkpoint: String): StreamingQuery =
-    parsed.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // One source scan feeds all three branches: persist the batch,
-        // else each .write re-reads and re-parses the source. The dead
-        // rows are not enriched, so they do not share main's schema and
-        // take their own write; all three are idempotent under
-        // crash-replay (see writeBatchIdempotent).
-        batch.persist()
-        try {
-          val (valid, dead) = StreamPipeline.deadLetterSplit(batch)
-          val enriched = StreamPipeline.enrich(valid)
-          writeBatchIdempotent(enriched, mainDir, batchId)
-          writeBatchIdempotent(dead, deadDir, batchId)
-          writeBatchIdempotent(enriched.filter(isAlert), alertDir, batchId)
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    eachBatch(parsed, checkpoint)(cached { (batch, batchId) =>
+      val (valid, dead) = StreamPipeline.deadLetterSplit(batch)
+      val enriched = StreamPipeline.enrich(valid)
+      writeBatchIdempotent(enriched, mainDir, batchId)
+      writeBatchIdempotent(dead, deadDir, batchId)
+      writeBatchIdempotent(enriched.filter(isAlert), alertDir, batchId)
+    })
 
   /** S8 retry loop: the reference's `banking.retry` topic
     * (`src/config/kafka_config.yml:28-30`) re-expressed as a file-source
@@ -151,29 +179,21 @@ object Sources {
     // are idempotent the usual way.
     val retries = spark.readStream.schema(retrySchema)
       .parquet(s"$retryDir/batch_*")
-    fresh.withColumn("retry_count", lit(0))
-      .unionByName(retries)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          val (valid, retry, dead) = StreamPipeline.retrySplit(batch, maxRetries)
-          // main and dead share retrySplit's schema: one routed write
-          writeBatchIdempotent(valid.union(dead),
-            when(col("is_valid"), "main").otherwise("dead"),
-            Map("main" -> mainDir, "dead" -> deadDir), batchId, Nil)
-          val parked = retry
-            .withColumn("retry_count", (col("retry_count") + 1).cast("int"))
-            .drop("is_valid", "validation_result")
-          // empty-park guard: an empty per-trigger write would make the
-          // file source see "new data" forever and never quiesce
-          if (!parked.isEmpty)
-            parked.write.mode("overwrite").parquet(s"$retryDir/batch_$batchId")
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    eachBatch(fresh.withColumn("retry_count", lit(0)).unionByName(retries),
+        checkpoint)(cached { (batch, batchId) =>
+      val (valid, retry, dead) = StreamPipeline.retrySplit(batch, maxRetries)
+      // main and dead share retrySplit's schema: one routed write
+      writeBatchIdempotent(valid.union(dead),
+        when(col("is_valid"), "main").otherwise("dead"),
+        Map("main" -> mainDir, "dead" -> deadDir), batchId, Nil)
+      val parked = retry
+        .withColumn("retry_count", (col("retry_count") + 1).cast("int"))
+        .drop("is_valid", "validation_result")
+      // empty-park guard: an empty per-trigger write would make the
+      // file source see "new data" forever and never quiesce
+      if (!parked.isEmpty)
+        parked.write.mode("overwrite").parquet(s"$retryDir/batch_$batchId")
+    })
   }
 
   /** Streaming near-duplicate dedup — the streaming end-game of the
@@ -191,40 +211,33 @@ object Sources {
     * survivors CREATE the index. Exactly-once: the clean sink and the
     * index both land batch N through [[writeBatchIdempotent]], so a
     * crash-replay of batch N replaces its own partitions — clean sink
-    * and index can never diverge across a retry. */
+    * and index can never diverge across a retry. The index's lease is
+    * held from before the index read; the append reclaims it. */
   def nearDupDedupQuery(docs: DataFrame, indexPath: String, cleanDir: String,
                         checkpoint: String,
                         threshold: Double = 0.8): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        batch.persist()
-        try {
-          val pairs = graft.llm.Dedup
-            .minhashLshPairsIncremental(spark, indexPath, batch)
-            .filter(col("jaccard") >= threshold)
-          // batch doc x is a dup iff some partner p is indexed (not in
-          // the batch) or is an earlier batch doc (p < x)
-          val partners = pairs.select(col("doc_a").as("x"), col("doc_b").as("p"))
-            .union(pairs.select(col("doc_b").as("x"), col("doc_a").as("p")))
-          val ids = batch.select(col("doc_id"))
-          val dupIds = partners
-            .join(ids.withColumnRenamed("doc_id", "x"), Seq("x"), "left_semi")
-            .join(ids.select(col("doc_id").as("p")).withColumn("in_batch", lit(true)),
-              Seq("p"), "left")
-            .filter(!coalesce(col("in_batch"), lit(false)) || col("p") < col("x"))
-            .select(col("x").as("doc_id")).distinct()
-          // eager localCheckpoint: the index append below must not
-          // re-run a lineage that READS indexPath while writing to it
-          val clean = batch.join(dupIds, Seq("doc_id"), "left_anti")
-            .localCheckpoint()
-          writeBatchIdempotent(clean, cleanDir, batchId)
-          graft.llm.Dedup.appendShingleIndexForBatch(clean, indexPath, batchId)
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    eachBatch(docs, checkpoint)(cached(leased(indexPath) { (batch, batchId) =>
+      val pairs = graft.llm.Dedup
+        .minhashLshPairsIncremental(batch.sparkSession, indexPath, batch)
+        .filter(col("jaccard") >= threshold)
+      // batch doc x is a dup iff some partner p is indexed (not in
+      // the batch) or is an earlier batch doc (p < x)
+      val partners = pairs.select(col("doc_a").as("x"), col("doc_b").as("p"))
+        .union(pairs.select(col("doc_b").as("x"), col("doc_a").as("p")))
+      val ids = batch.select(col("doc_id"))
+      val dupIds = partners
+        .join(ids.withColumnRenamed("doc_id", "x"), Seq("x"), "left_semi")
+        .join(ids.select(col("doc_id").as("p")).withColumn("in_batch", lit(true)),
+          Seq("p"), "left")
+        .filter(!coalesce(col("in_batch"), lit(false)) || col("p") < col("x"))
+        .select(col("x").as("doc_id")).distinct()
+      // eager localCheckpoint: the index append below must not
+      // re-run a lineage that READS indexPath while writing to it
+      val clean = batch.join(dupIds, Seq("doc_id"), "left_anti")
+        .localCheckpoint()
+      writeBatchIdempotent(clean, cleanDir, batchId)
+      graft.llm.Dedup.appendShingleIndexForBatch(clean, indexPath, batchId)
+    }))
 
   /** Streaming SEMANTIC dedup — [[nearDupDedupQuery]]'s shape in
     * embedding space: each micro-batch of (vec_id, embedding) rows is
@@ -243,47 +256,41 @@ object Sources {
     * which the index then pins for every later batch. Exactly-once:
     * the clean sink and both index dirs land batch N through
     * [[writeBatchIdempotent]], so a crash-replay of batch N replaces
-    * its own partitions. */
+    * its own partitions. The index's lease is held from before the
+    * index read; the append reclaims it. */
   def semanticDedupQuery(emb: DataFrame, indexPath: String, cleanDir: String,
                          checkpoint: String,
                          threshold: Double = 0.9,
                          multiProbe: Boolean = false): StreamingQuery =
-    emb.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        batch.persist()
-        try {
-          // ONE width per trigger, resolved before the dedup and passed
-          // to the append too: recomputing after the dedup would size
-          // from the survivor count and could pin a cold-start index
-          // narrower than the width the dedup actually probed at
-          val np = graft.llm.Similarity
-            .resolveIndexWidth(spark, indexPath, batch)
-          // directed pairs: vec_a is always a batch member; the probe
-          // ring (when on) fans out the batch side only — recall lift
-          // at |batch|-proportional extra cost, never a corpus expand
-          val pairs = graft.llm.Similarity
-            .lshPairsIncremental(spark, indexPath, batch, threshold, np,
-              multiProbe)
-          val dupIds = pairs
-            .join(batch.select(col("vec_id").as("vec_b"))
-                .withColumn("in_batch", lit(true)),
-              Seq("vec_b"), "left")
-            .filter(!coalesce(col("in_batch"), lit(false)) ||
-              col("vec_b") < col("vec_a"))
-            .select(col("vec_a").as("vec_id")).distinct()
-          // eager localCheckpoint: the index append below must not
-          // re-run a lineage that READS indexPath while writing to it
-          val clean = batch.join(dupIds, Seq("vec_id"), "left_anti")
-            .localCheckpoint()
-          writeBatchIdempotent(clean, cleanDir, batchId)
-          graft.llm.Similarity.appendLshIndexForBatch(
-            clean, indexPath, batchId, np)
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    eachBatch(emb, checkpoint)(cached(leased(indexPath) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // ONE width per trigger, resolved before the dedup and passed
+      // to the append too: recomputing after the dedup would size
+      // from the survivor count and could pin a cold-start index
+      // narrower than the width the dedup actually probed at
+      val np = graft.llm.Similarity
+        .resolveIndexWidth(spark, indexPath, batch)
+      // directed pairs: vec_a is always a batch member; the probe
+      // ring (when on) fans out the batch side only — recall lift
+      // at |batch|-proportional extra cost, never a corpus expand
+      val pairs = graft.llm.Similarity
+        .lshPairsIncremental(spark, indexPath, batch, threshold, np,
+          multiProbe)
+      val dupIds = pairs
+        .join(batch.select(col("vec_id").as("vec_b"))
+            .withColumn("in_batch", lit(true)),
+          Seq("vec_b"), "left")
+        .filter(!coalesce(col("in_batch"), lit(false)) ||
+          col("vec_b") < col("vec_a"))
+        .select(col("vec_a").as("vec_id")).distinct()
+      // eager localCheckpoint: the index append below must not
+      // re-run a lineage that READS indexPath while writing to it
+      val clean = batch.join(dupIds, Seq("vec_id"), "left_anti")
+        .localCheckpoint()
+      writeBatchIdempotent(clean, cleanDir, batchId)
+      graft.llm.Similarity.appendLshIndexForBatch(
+        clean, indexPath, batchId, np)
+    }))
 
   /** Streaming WEB FIRST MILE (round 11, VERDICT r10 task 4) — URL
     * mirror dedup maintained incrementally, the crawl-side twin of
@@ -304,47 +311,34 @@ object Sources {
     * [[BatchState.compactState]] mutually exclusive. */
   def urlDedupQuery(docs: DataFrame, statePath: String, outDir: String,
                     checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        batch.persist()
-        try {
-          // acquire INSIDE the try (ADVICE r11): a lease-conflict
-          // require must reach the finally's unpersist, or the failed
-          // trigger leaks the persisted batch in the executor cache
-          // for the lifetime of the stopped query
-          BatchState.acquireLease(spark, statePath, s"append:$batchId")
-          val parsed = batch.filter(col("doc_id").isNotNull)
-            .withColumn("u",
-              call_function("url_parts", expr(graft.llm.Curate.UrlGenSql)))
-            .select(col("doc_id"), col("u.domain").as("domain"),
-              col("u.path").as("path"))
-          val seen = BatchState.priorState(spark, statePath, batchId)
-            .fold(Seq.empty[(String, String)].toDF("domain", "path"))(
-              _.select("domain", "path"))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("domain", "path")
-          val verdict = parsed
-            .withColumn("first_in_batch",
-              col("doc_id") === min(col("doc_id")).over(w))
-            .join(seen.withColumn("indexed", lit(true)),
-              Seq("domain", "path"), "left")
-            .withColumn("keep",
-              col("first_in_batch") && !coalesce(col("indexed"), lit(false)))
-            .select("doc_id", "domain", "path", "keep")
-            .localCheckpoint()
-          val novel = parsed.select("domain", "path").distinct()
-            .join(seen, Seq("domain", "path"), "left_anti")
-            .localCheckpoint() // sever the statePath read before writing it
-          writeBatchIdempotent(verdict, outDir, batchId)
-          writeBatchIdempotent(novel, statePath, batchId)
-          BatchState.releaseLease(spark, statePath)
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    eachBatch(docs, checkpoint)(cached(leased(statePath) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val parsed = batch.filter(col("doc_id").isNotNull)
+        .withColumn("u",
+          call_function("url_parts", expr(graft.llm.Curate.UrlGenSql)))
+        .select(col("doc_id"), col("u.domain").as("domain"),
+          col("u.path").as("path"))
+      val seen = BatchState.priorState(spark, statePath, batchId)
+        .fold(Seq.empty[(String, String)].toDF("domain", "path"))(
+          _.select("domain", "path"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("domain", "path")
+      val verdict = parsed
+        .withColumn("first_in_batch",
+          col("doc_id") === min(col("doc_id")).over(w))
+        .join(seen.withColumn("indexed", lit(true)),
+          Seq("domain", "path"), "left")
+        .withColumn("keep",
+          col("first_in_batch") && !coalesce(col("indexed"), lit(false)))
+        .select("doc_id", "domain", "path", "keep")
+        .localCheckpoint()
+      val novel = parsed.select("domain", "path").distinct()
+        .join(seen, Seq("domain", "path"), "left_anti")
+        .localCheckpoint() // sever the statePath read before writing it
+      writeBatchIdempotent(verdict, outDir, batchId)
+      writeBatchIdempotent(novel, statePath, batchId)
+    }))
 
   /** Streaming CURATION LEDGER (round 10, VERDICT r9 task 7) — the
     * cross-modal keep/drop artifact
@@ -371,32 +365,11 @@ object Sources {
   def curationLedgerQuery(docs: DataFrame, statePath: String,
                           ledgerDir: String,
                           checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        batch.persist()
-        try {
-          // Lease FIRST among the try's work, before any state read or
-          // output write: a crashed compactor (mid-swap, lease still
-          // naming 'compact') must fail this trigger loudly BEFORE a
-          // half-swapped index could be read as empty and wrong
-          // verdicts written. Inside the try (ADVICE r11) so the
-          // conflict failure still reaches the finally's unpersist.
-          // The trigger's own crash-replay reclaims its same-holder
-          // lease.
-          BatchState.acquireLease(spark, statePath, s"append:$batchId")
-          val (ledger, novels) = ledgerVerdictForBatch(batch, statePath, batchId)
-          writeBatchIdempotent(ledger, ledgerDir, batchId)
-          writeLedgerNovels(novels, statePath, batchId)
-          // released only on success: a failed trigger leaves the
-          // lease naming this batch, so a CONFLICTING writer (the
-          // compactor) fails loudly while the replay goes through
-          BatchState.releaseLease(spark, statePath)
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    eachBatch(docs, checkpoint)(cached(leased(statePath) { (batch, batchId) =>
+      val (ledger, novels) = ledgerVerdictForBatch(batch, statePath, batchId)
+      writeBatchIdempotent(ledger, ledgerDir, batchId)
+      writeLedgerNovels(novels, statePath, batchId)
+    }))
 
   /** The per-batch half of [[curationLedgerQuery]], extracted (round
     * 12) so the streaming shard writer ([[trainingShardsQuery]]) can
@@ -580,41 +553,29 @@ object Sources {
                           shards: Int = graft.llm.Curate.NumShards,
                           maxPartials: Int = ShardPartialMaxPartitions)
     : StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        batch.persist()
-        try {
-          // lease FIRST inside the try (see curationLedgerQuery)
-          BatchState.acquireLease(spark, statePath, s"append:$batchId")
-          // occupancy-triggered fold of PRIOR batches' partials (the
-          // round-13 growth bound); holds the lease this trigger owns
-          maybeCompactShardPartials(spark, shardDir, s"$statePath/pack",
-            batchId, maxPartials)
-          val (ledger, novels) = ledgerVerdictForBatch(batch, statePath, batchId)
-          val survivors = batch
-            .join(ledger.filter(col("keep")).select("doc_id"),
-              Seq("doc_id"), "left_semi")
-            .join(graft.llm.Curate.qualityKept(batch).select("doc_id"),
-              Seq("doc_id"), "left_semi")
-          val packPath = s"$statePath/pack"
-          // eager localCheckpoint: the delta write below must not
-          // re-run a lineage that READS packPath while writing to it
-          val packed = graft.llm.Curate.packBatchWithBases(survivors,
-              packBases(spark, packPath, batchId))
-            .localCheckpoint()
-          writeBatchIdempotent(
-            graft.llm.Curate.shardSummary(packed, shards),
-            shardDir, batchId, extraPartitions = Seq("shard"))
-          writeLedgerNovels(novels, statePath, batchId)
-          writeBatchIdempotent(packDelta(packed), packPath, batchId)
-          // released only on success (fail-loud conflict semantics)
-          BatchState.releaseLease(spark, statePath)
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    eachBatch(docs, checkpoint)(cached(leased(statePath) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val packPath = s"$statePath/pack"
+      // occupancy-triggered fold of PRIOR batches' partials (the
+      // round-13 growth bound); holds the lease this trigger owns
+      maybeCompactShardPartials(spark, shardDir, packPath, batchId, maxPartials)
+      val (ledger, novels) = ledgerVerdictForBatch(batch, statePath, batchId)
+      val survivors = batch
+        .join(ledger.filter(col("keep")).select("doc_id"),
+          Seq("doc_id"), "left_semi")
+        .join(graft.llm.Curate.qualityKept(batch).select("doc_id"),
+          Seq("doc_id"), "left_semi")
+      // eager localCheckpoint: the delta write below must not
+      // re-run a lineage that READS packPath while writing to it
+      val packed = graft.llm.Curate.packBatchWithBases(survivors,
+          packBases(spark, packPath, batchId))
+        .localCheckpoint()
+      writeBatchIdempotent(
+        graft.llm.Curate.shardSummary(packed, shards),
+        shardDir, batchId, extraPartitions = Seq("shard"))
+      writeLedgerNovels(novels, statePath, batchId)
+      writeBatchIdempotent(packDelta(packed), packPath, batchId)
+    }))
 
   /** Streaming POSITIONAL POSTINGS INDEX maintenance (round 12) — the
     * standing-retrieval-workload half of
@@ -632,25 +593,15 @@ object Sources {
     * filter prunes at the scan. */
   def postingsIndexQuery(docs: DataFrame, statePath: String,
                          checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        batch.persist()
-        try {
-          BatchState.acquireLease(spark, statePath, s"append:$batchId")
-          writeBatchIdempotent(
-            batch.filter(col("doc_id").isNotNull)
-              .select(col("doc_id"),
-                posexplode(graft.llm.TextPrep.wordsCol))
-              .toDF("doc_id", "pos", "term")
-              .select(col("term"), col("doc_id"), col("pos")),
-            statePath, batchId)
-          BatchState.releaseLease(spark, statePath)
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    eachBatch(docs, checkpoint)(leased(statePath) { (batch, batchId) =>
+      writeBatchIdempotent(
+        batch.filter(col("doc_id").isNotNull)
+          .select(col("doc_id"),
+            posexplode(graft.llm.TextPrep.wordsCol))
+          .toDF("doc_id", "pos", "term")
+          .select(col("term"), col("doc_id"), col("pos")),
+        statePath, batchId)
+    })
 
   /** Streaming SEQUENCE PACKING — the concat-and-cut training-batch
     * assignment ([[graft.llm.Curate.packSequences]]) maintained
@@ -669,31 +620,15 @@ object Sources {
   def packSequencesQuery(docs: DataFrame, statePath: String,
                          packedDir: String,
                          checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        batch.persist()
-        try {
-          // lease FIRST inside the try (see curationLedgerQuery): a
-          // crashed compactor must fail this trigger before bases
-          // could read half-swapped state, and the conflict failure
-          // must still reach the finally's unpersist (ADVICE r11);
-          // the trigger's own replay reclaims its holder string
-          BatchState.acquireLease(spark, statePath, s"append:$batchId")
-          // eager localCheckpoint: the delta write below must not
-          // re-run a lineage that READS statePath while writing to it
-          val packed = graft.llm.Curate.packBatchWithBases(batch,
-              packBases(spark, statePath, batchId))
-            .localCheckpoint()
-          writeBatchIdempotent(packed, packedDir, batchId)
-          writeBatchIdempotent(packDelta(packed), statePath, batchId)
-          // released only on success (fail-loud conflict semantics)
-          BatchState.releaseLease(spark, statePath)
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    eachBatch(docs, checkpoint)(leased(statePath) { (batch, batchId) =>
+      // eager localCheckpoint: the delta write below must not
+      // re-run a lineage that READS statePath while writing to it
+      val packed = graft.llm.Curate.packBatchWithBases(batch,
+          packBases(batch.sparkSession, statePath, batchId))
+        .localCheckpoint()
+      writeBatchIdempotent(packed, packedDir, batchId)
+      writeBatchIdempotent(packDelta(packed), statePath, batchId)
+    })
 
   /** Generic exactly-once-style parquet sink: any stream →
     * [[writeBatchIdempotent]] per micro-batch. Checkpoint tracks the
@@ -701,13 +636,7 @@ object Sources {
     * write idempotent under replay of the last uncommitted batch. */
   def idempotentSinkQuery(df: DataFrame, outDir: String,
                           checkpoint: String): StreamingQuery =
-    df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchIdempotent(batch, outDir, batchId)
-      }
-      .start()
+    eachBatch(df, checkpoint)(writeBatchIdempotent(_, outDir, _))
 
   /** Streaming sketch maintenance: each micro-batch aggregates its own
     * Count–Min sketch (one Depth×Width counter row per batch, whatever
@@ -718,18 +647,13 @@ object Sources {
     * read time ([[readCmsSketch]]), bit-identical to one batch build
     * over the union of all batches. */
   def cmsSinkQuery(docs: DataFrame, sketchDir: String,
-                   checkpoint: String): StreamingQuery = {
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sk = batch
-          .select(explode(graft.llm.TextPrep.wordsCol).as("word"))
-          .agg(call_function("cms_build", col("word")).as("sk"))
-        writeBatchIdempotent(sk, sketchDir, batchId)
-      }
-      .start()
-  }
+                   checkpoint: String): StreamingQuery =
+    eachBatch(docs, checkpoint) { (batch, batchId) =>
+      val sk = batch
+        .select(explode(graft.llm.TextPrep.wordsCol).as("word"))
+        .agg(call_function("cms_build", col("word")).as("sk"))
+      writeBatchIdempotent(sk, sketchDir, batchId)
+    }
 
   /** Streaming ANN ingestion: each micro-batch of new vectors is
     * assigned to the PERSISTED centroid set (fitted once by
@@ -748,14 +672,11 @@ object Sources {
     // a 10 s trigger would otherwise re-list and re-decode the parquet
     // footers forever on the hot path.
     val centroids = vectors.sparkSession.read.parquet(centroidsPath).cache()
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val assigned = graft.llm.Similarity.assignToFixedCentroids(batch, centroids)
-        writeBatchIdempotent(assigned, indexDir, batchId, Seq("centroid_id"))
-      }
-      .start()
+    eachBatch(vectors, checkpoint) { (batch, batchId) =>
+      writeBatchIdempotent(
+        graft.llm.Similarity.assignToFixedCentroids(batch, centroids),
+        indexDir, batchId, Seq("centroid_id"))
+    }
   }
 
   /** Element-wise sum of every per-batch sketch → the corpus sketch

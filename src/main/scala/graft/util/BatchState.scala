@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions.{col, lit}
   *  - [[writeBatchIdempotent]] writes batch N; a replay replaces it;
   *  - [[priorState]] reads the rows of the batches before N;
   *  - [[compactState]] folds the per-batch partitions into `-1`;
-  *  - [[acquireLease]] / [[releaseLease]] make appends and compaction
-  *    of one state root mutually exclusive.
+  *  - [[underLease]] runs a writer under the root's write lease, so
+  *    appends and compaction of one state root are mutually exclusive;
+  *    every writer takes the lease through it.
   *
   * The partition column is `micro_batch_id`, NOT `batch_id`: the
   * transaction schema declares a DOMAIN `batch_id` string field
@@ -174,6 +175,17 @@ object BatchState {
     deleteIfExists(fileSystem(spark, lease), lease)
   }
 
+  /** `body` run holding the write lease of `root` as `holder`. The
+    * lease is released only if `body` returns: a throw leaves it
+    * naming `holder`, so a conflicting writer fails loudly and the
+    * same holder's retry reclaims it (see [[acquireLease]]). */
+  private[graft] def underLease(spark: SparkSession, root: String,
+                                holder: String)(body: => Unit): Unit = {
+    acquireLease(spark, root, holder)
+    body
+    releaseLease(spark, root)
+  }
+
   /** Small-files maintenance for any per-batch state: fold its
     * per-trigger partitions into `micro_batch_id=-1` under the root's
     * write lease. `root` is one state dir, or — when it holds no
@@ -188,21 +200,20 @@ object BatchState {
     * this fail-loud — a live trigger refuses to append while it is
     * held. A re-run after a crash reclaims its own lease and finishes
     * or rolls back the interrupted swap. */
-  def compactState(spark: SparkSession, root: String): Unit = {
-    acquireLease(spark, root, "compact")
-    val r = new Path(root)
-    val fs = fileSystem(spark, r)
-    // a dir whose every partition a crashed swap moved aside counts too
-    def holdsState(d: Path): Boolean =
-      Seq(d, new Path(d, ".old")).exists(partitionDirs(fs, _).nonEmpty)
-    val dirs =
-      if (holdsState(r)) Seq(r)
-      else fs.listStatus(r).toSeq
-        .filter(s => s.isDirectory && !s.getPath.getName.startsWith("."))
-        .map(_.getPath).filter(holdsState)
-    dirs.foreach(d => compactPartitionsLocked(spark, d.toString))
-    releaseLease(spark, root)
-  }
+  def compactState(spark: SparkSession, root: String): Unit =
+    underLease(spark, root, "compact") {
+      val r = new Path(root)
+      val fs = fileSystem(spark, r)
+      // a dir whose every partition a crashed swap moved aside counts too
+      def holdsState(d: Path): Boolean =
+        Seq(d, new Path(d, ".old")).exists(partitionDirs(fs, _).nonEmpty)
+      val dirs =
+        if (holdsState(r)) Seq(r)
+        else fs.listStatus(r).toSeq
+          .filter(s => s.isDirectory && !s.getPath.getName.startsWith("."))
+          .map(_.getPath).filter(holdsState)
+      dirs.foreach(d => compactPartitionsLocked(spark, d.toString))
+    }
 
   /** The nested partition columns under a partition dir (`tbl`,
     * `shard`, …), read from the listing: the first `k=v` child, down. */

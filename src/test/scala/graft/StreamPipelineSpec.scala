@@ -963,14 +963,73 @@ class StreamPipelineSpec extends SparkSpec {
       // holds the state root's lease, a live trigger must REFUSE to
       // append rather than race the swap
       BatchState.acquireLease(spark, s"$tmp/ustate", "compact")
+      spark.catalog.clearCache()
       memU.addData(udoc(200L))
       val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         qU.processAllAvailable()
       }
       assert(e.getMessage.contains("write-locked"),
         s"expected a lease-conflict failure, got: ${e.getMessage}")
+      // the refused trigger still unpersisted its batch
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "a trigger refused by the lease left its batch cached")
       BatchState.releaseLease(spark, s"$tmp/ustate")
     } finally { qU.stop(); qL.stop() }
+  }
+
+  test("dedup sinks lease the index before reading it: a refused trigger writes no clean batch, its replay does") {
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = Files.createTempDirectory("graft_dedup_lease").toString
+    val vecs = Tables.embeddings(spark, sf())
+      .filter(col("embedding").isNotNull).orderBy("vec_id").limit(2)
+      .select(col("embedding").cast("array<double>"))
+      .as[Seq[Double]].collect()
+    val texts = Seq(
+      "completely different words here about spark engines today ok",
+      "an entirely novel document with its own unique content words")
+    val docs = MemoryStream[(Long, String, String, String, Long)]
+    val emb = MemoryStream[(Long, Option[Seq[Double]])]
+    // per sink: how to start it on a checkpoint, and how to add batch b
+    val sinks = Seq[(String,
+        (String, String, String) => org.apache.spark.sql.streaming.StreamingQuery,
+        Int => Unit)](
+      ("shingle",
+        Sources.nearDupDedupQuery(
+          docs.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"), _, _, _),
+        b => docs.addData((b.toLong, texts(b), "en", "s", 60L))),
+      ("lsh",
+        Sources.semanticDedupQuery(
+          emb.toDF().toDF("vec_id", "embedding"), _, _, _, threshold = 0.9999),
+        b => emb.addData((b.toLong, Some(vecs(b))))))
+    for ((name, start, add) <- sinks) {
+      val (idx, clean, ckpt) =
+        (s"$tmp/$name/idx", s"$tmp/$name/clean", s"$tmp/$name/ckpt")
+      def landed(b: Int) =
+        Files.exists(java.nio.file.Paths.get(s"$clean/micro_batch_id=$b"))
+      val q = start(idx, clean, ckpt)
+      try {
+        add(0)
+        q.processAllAvailable()
+        assert(landed(0), s"$name: batch 0 did not land")
+        // a compactor holds the index (say it crashed mid-swap): the
+        // next trigger must fail before it reads the index
+        BatchState.acquireLease(spark, idx, "compact")
+        add(1)
+        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q.processAllAvailable()
+        }
+        assert(e.getMessage.contains("write-locked"),
+          s"$name: expected a lease-conflict failure, got: ${e.getMessage}")
+        assert(!landed(1),
+          s"$name: batch 1 reached the clean sink from an unleased index read")
+      } finally q.stop()
+      BatchState.compactState(spark, idx) // reclaims 'compact'
+      val replay = start(idx, clean, ckpt)
+      try {
+        replay.processAllAvailable()
+        assert(landed(1), s"$name: the replay did not land batch 1")
+      } finally replay.stop()
+    }
   }
 
   test("streaming near-dup dedup cold start: first batch creates the index") {
