@@ -17,8 +17,19 @@ object StreamDemo {
     // demo runs the same engine settings the bench times
     val spark = graft.util.Sessions.build("streamdemo", cpusDefault = "8")
     spark.sparkContext.setLogLevel("WARN")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_demo").toString
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_demo")
+    val ok = try run(spark, n, tmp.toString)
+    finally {
+      spark.stop()
+      java.nio.file.Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
+    }
+    if (!ok) sys.exit(1)
+  }
 
+  /** Run the topology over `n` generated events in `tmp`; true when
+    * every event reached the main or the dead-letter sink. */
+  private def run(spark: SparkSession, n: Long, tmp: String): Boolean = {
     // Producer side: generator → JSON files (stands in for the Kafka topic).
     Generator.transactions(spark, n)
       .write.mode("overwrite").json(s"$tmp/in")
@@ -51,7 +62,6 @@ object StreamDemo {
     println(s"categories: " + spark.read.parquet(s"$tmp/main")
       .groupBy("transaction_category").count().collect()
       .map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(", "))
-    spark.stop()
-    if (nMain + nDead != n) sys.exit(1)
+    nMain + nDead == n
   }
 }

@@ -1,5 +1,6 @@
 package graft.util
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 
 /** ONE session builder for every entry point (round 14, VERDICT r13
@@ -83,6 +84,20 @@ import org.apache.spark.sql.SparkSession
   *    0.25 ms. Permission bits, checksum files, rename semantics and
   *    outputs are unchanged, and the checkpoint keeps Spark's FileContext
   *    manager with its atomic fail-if-exists rename.
+  *  - Hadoop's per-key source map (`Configuration.updatingResource`) is
+  *    cleared on the session's two base Hadoop confs ([[dropSourceMaps]]);
+  *    `sessionState.newHadoopConf()` copies the SparkContext's. Spark
+  *    ships that conf with every file scan, write job and write task,
+  *    and `Configuration.write` gzips each key's source array in its
+  *    own GZIP stream, which `readFields` inflates again. The conf holds
+  *    about 1,100 keys: 520 from `yarn-default.xml` and 194 from
+  *    `mapred-default.xml` (registered when the SparkContext loads
+  *    `JobConf`), 356 from `core-default.xml`, the rest set by Spark or
+  *    graft. A `SerializableConfiguration` round trip, warm, one thread,
+  *    median of 50 on 4 cores: 113 KB, 9.0 ms to serialize and 9.2 ms
+  *    to deserialize with the map; 69 KB, 0.7 ms and 1.3 ms without it.
+  *    Keys and values are unchanged; only `getPropertySources`
+  *    (diagnostics) returns null for the cleared keys.
   */
 object Sessions {
 
@@ -103,7 +118,7 @@ object Sessions {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", cpusDefault)
     val localDir = new java.io.File(s"target/spark-local-$tool").getAbsolutePath
     new java.io.File(localDir).mkdirs()
-    SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
@@ -114,6 +129,30 @@ object Sessions {
       .config("spark.cleaner.referenceTracking.blocking", "false")
       .config(required)
       .getOrCreate()
+    dropSourceMaps(spark)
+    spark
+  }
+
+  /** Clear `conf`'s per-key source map, after loading its resources
+    * (a later first load would fill the map again). Keys and values are
+    * unchanged. */
+  def dropSourceMap(conf: Configuration): Unit = {
+    conf.size()
+    val sources = classOf[Configuration].getDeclaredField("updatingResource")
+    sources.setAccessible(true)
+    sources.get(conf).asInstanceOf[java.util.Map[_, _]].clear()
+  }
+
+  /** [[dropSourceMap]] on the session's two base Hadoop confs, which
+    * every per-query conf is copied from: the SparkContext's and the
+    * shared state's (`private[sql]`). The shared state is built first:
+    * building it registers `hdfs-default.xml` and three more default
+    * resources, and that reloads every conf, filling its map again. */
+  def dropSourceMaps(spark: SparkSession): Unit = {
+    val shared = spark.sharedState
+    dropSourceMap(spark.sparkContext.hadoopConfiguration)
+    dropSourceMap(shared.getClass.getMethod("hadoopConf").invoke(shared)
+      .asInstanceOf[Configuration])
   }
 
   /** Run `body` — an ITERATIVE driver loop (label propagation, BPE

@@ -18,9 +18,11 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       // as in util.Sessions.build: graft's functions, UTC, NANOS
-      // parquet as long, the fork-free local filesystem
+      // parquet as long, the fork-free local filesystem, and Hadoop
+      // confs shipped without their per-key source map
       .config(graft.util.Sessions.required)
       .getOrCreate()
+    graft.util.Sessions.dropSourceMaps(s)
     s.sparkContext.setLogLevel("WARN")
     // The iterative CC/PageRank loops localCheckpoint() every round and
     // unpersist the previous round's blocks; each unpersist emits a WARN
